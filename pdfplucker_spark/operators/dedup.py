@@ -26,7 +26,12 @@ from pdfplucker_spark.functions.hashing import (
     sql_expr_md5_long,
     sql_md5_long,
 )
-from pdfplucker_spark.plans.guards import DEFAULT_BUCKET_CAP, drop_oversized_buckets
+from pdfplucker_spark.plans.guards import (
+    DEFAULT_BUCKET_CAP,
+    guarded_prefix_join,
+    guarded_probe,
+    guarded_self_join,
+)
 from pdfplucker_spark.sources.tables import load
 
 N_HASHES = 8
@@ -228,17 +233,9 @@ def _minhash_pairs(d: DataFrame, bucket_cap: int | None) -> DataFrame:
     # without it the minhash scan of the corpus runs twice. Per-doc sigs are
     # 8 longs — ~80 GB at 1e9 docs, spillable (MEMORY_AND_DISK default).
     sigs = d.select("doc_id", *_sig_cols()).persist()
-    bands = drop_oversized_buckets(
-        _band_rows(sigs).persist(), ("band", "key"), bucket_cap, "dedup_minhash_pairs"
-    )
-    a = bands.alias("a")
-    b_ = bands.alias("b")
     cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        guarded_self_join(
+            _band_rows(sigs), ("band", "key"), "doc_id", bucket_cap, "dedup_minhash_pairs"
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
@@ -322,17 +319,22 @@ def q_dedup_incremental(
 
     d = load(spark, sf_dir, "documents")
     sigs = d.select("doc_id", *_sig_cols()).persist()
-    bands = drop_oversized_buckets(
-        _band_rows(sigs).persist(), ("band", "key"), bucket_cap, "dedup_incremental"
-    )
+    # persisted: both slices read it, and the cap counts occupancy over
+    # all of it — batch and index bands alike
+    bands = _band_rows(sigs).persist()
     gate = md5_long(F.concat(F.lit("inc:"), F.col("doc_id").cast("string"))) % 10
-    batch = bands.where(gate == 0).select(
-        F.col("doc_id").alias("batch_doc_id"), "band", "key"
+
+    def side(pred, name):
+        return bands.where(pred).select(F.col("doc_id").alias(name), "band", "key")
+
+    screen = guarded_probe(
+        side(gate != 0, "index_doc_id"),
+        ("band", "key"),
+        bucket_cap,
+        "dedup_incremental",
+        counted=bands,
     )
-    index = bands.where(gate != 0).select(
-        F.col("doc_id").alias("index_doc_id"), "band", "key"
-    )
-    cand = batch.join(index, ["band", "key"]).select(
+    cand = screen(side(gate == 0, "batch_doc_id")).select(
         "batch_doc_id", "index_doc_id"
     ).distinct()
     toks = d.select(
@@ -538,22 +540,13 @@ def _simhash_pairs(d: DataFrame, bucket_cap: int | None) -> DataFrame:
         "simhash",
         F.explode(F.expr("array(" + ", ".join(key_exprs) + ")")).alias("bkey"),
     )
-    bands = drop_oversized_buckets(
-        bands.persist(), ("bkey",), bucket_cap, "dedup_simhash_pairs"
-    )
-    a = bands.alias("a")
-    b_ = bands.alias("b")
     # hamming computed and filtered BEFORE the dedup: bit_count is a cheap
     # codegen expression, hamming is functionally determined by the pair,
     # and most within-bucket collisions fail the radius — so the distinct
     # shuffles only matching pairs (<= 20x multiplicity) instead of every
     # candidate row with two 8-byte fingerprints in tow
     return (
-        a.join(
-            b_,
-            (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        guarded_self_join(bands, ("bkey",), "doc_id", bucket_cap, "dedup_simhash_pairs")
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -668,32 +661,12 @@ def q_dedup_ngram_pairs(
     sh = shingles_frame(d).persist()
     # sz rides the explode: |sh(X)| is size(sh) — no per-doc counting
     # aggregation (and no sizes join) is needed, the exploded row count per
-    # doc IS the array length
-    ex = sh.select(
-        "doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("g")
-    ).persist()
-    # ONE shared guard pass: filtered index + surviving document
-    # frequencies from the same aggregation (shingles are distinct per doc)
-    index, _ = drop_oversized_buckets(
-        ex, ("g",), bucket_cap, "dedup_ngram_pairs", with_occupancy=True
+    # doc IS the array length. The kernel ranks shingles rarest-first by
+    # the guard's own document frequencies and self-joins the prefixes.
+    ex = sh.select("doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("g"))
+    joined, _ = guarded_prefix_join(
+        ex, "g", "doc_id", NGRAM_THRESHOLD, bucket_cap, "dedup_ngram_pairs"
     )
-    # the guard's filtered frame carries _occ (= document frequency: one
-    # row per doc per distinct shingle) — rank rarest-first without a
-    # second counts join
-    ranked = index.withColumn(
-        "r",
-        F.row_number().over(
-            Window.partitionBy("doc_id").orderBy(F.asc("_occ"), F.asc("g"))
-        ),
-    )
-    # prefix bound uses the FULL |sh(X)| even though r ranks only in-index
-    # shingles — under the cap the prefix can only get longer than the
-    # lossless minimum, so the filter stays valid
-    # persist: prefix feeds BOTH aliases of its self-join — without it the
-    # sizes agg, guard join and the corpus-scale rank window run twice
-    prefix = ranked.where(
-        F.col("r") <= F.col("sz") - F.ceil(F.lit(NGRAM_THRESHOLD) * F.col("sz")) + 1
-    ).select("doc_id", "g", "r", "sz").persist()
     # PPJoin position filter, also lossless: for the FIRST common element
     # in the global order, matched at ranks (r_a, r_b), the overlap can be
     # at most 1 + min(sz_a − r_a, sz_b − r_b); a valid pair needs overlap
@@ -708,17 +681,9 @@ def q_dedup_ngram_pairs(
         - F.lit(1e-9)
     )
     cand = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), "g")
-        .where(
-            (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (
-                1
-                + F.least(
-                    F.col("a.sz") - F.col("a.r"), F.col("b.sz") - F.col("b.r")
-                )
-                >= o_req
-            )
+        joined.where(
+            1 + F.least(F.col("a.sz") - F.col("a.r"), F.col("b.sz") - F.col("b.r"))
+            >= o_req
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
@@ -803,13 +768,13 @@ def q_dedup_containment_pairs(
     Production corpora would add prefix filtering on top; the df cap is
     what makes the worst case bounded."""
     d = load(spark, sf_dir, "documents", fan_out=True)
-    ex = shingles_frame(d).select("doc_id", F.explode("sh").alias("g")).persist()
+    ex = shingles_frame(d).select("doc_id", F.explode("sh").alias("g"))
+    # sizes reads the frame the kernel persists
     sizes = ex.groupBy("doc_id").agg(F.count("*").alias("sz_a"))
-    exg = drop_oversized_buckets(ex, ("g",), df_cap, "dedup_containment_pairs")
     pairs = (
-        exg.alias("a")
-        .join(exg.alias("b"), "g")
-        .where(F.col("a.doc_id") != F.col("b.doc_id"))
+        guarded_self_join(
+            ex, ("g",), "doc_id", df_cap, "dedup_containment_pairs", asymmetric=True
+        )
         .groupBy(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
@@ -863,45 +828,24 @@ def q_dedup_containment_prefix(
     guards the degenerate corpus; the df ordering it needs is the same
     aggregation, shared."""
     d = load(spark, sf_dir, "documents", fan_out=True)
-    ex = shingles_frame(d).select("doc_id", F.explode("sh").alias("g")).persist()
+    # sz rides the explode (shingles are distinct per doc, so size(sh) is
+    # the per-doc row count); A's prefix joins B's full guarded index
+    ex = shingles_frame(d).select(
+        "doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("g")
+    )
     sizes = ex.groupBy("doc_id").agg(F.count("*").alias("sz_a"))
-    # ONE shared guard pass: the filtered index AND the surviving
-    # occupancy counts (document frequencies — shingles are distinct per
-    # doc) come from the same aggregation via plans/guards
-    index, _ = drop_oversized_buckets(
-        ex, ("g",), df_cap, "dedup_containment_prefix", with_occupancy=True
+    joined, index = guarded_prefix_join(
+        ex,
+        "g",
+        "doc_id",
+        CONTAINMENT_THRESHOLD,
+        df_cap,
+        "dedup_containment_prefix",
+        asymmetric=True,
     )
-    index = index.select("doc_id", "g", "_occ")
-    ranked = (
-        index.withColumn(
-            "r",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy(F.asc("_occ"), F.asc("g"))
-            ),
-        )
-        .join(sizes.withColumnRenamed("doc_id", "doc_id2"), F.col("doc_id") == F.col("doc_id2"))
-        .drop("doc_id2")
-    )
-    # prefix length = sz - ceil(t*sz) + 1 over the SURVIVING shingles'
-    # count? No: the containment denominator is the full |sh(A)|, and the
-    # guard only removes join keys — the prefix bound must therefore use
-    # the count of A's shingles IN THE INDEX (rare ones), which is what
-    # `r` ranks over; using full sz_a keeps the bound valid (prefix can
-    # only get longer), so the filter stays lossless under the cap.
-    prefix = ranked.where(
-        F.col("r") <= F.col("sz_a") - F.ceil(F.lit(CONTAINMENT_THRESHOLD) * F.col("sz_a")) + 1
-    ).select("doc_id", "g")
-    # _occ dropped: the candidate/verify joins key on (doc_id, g) only
-    index = index.select("doc_id", "g").persist()
-    cand = (
-        prefix.alias("a")
-        .join(index.alias("b"), "g")
-        .where(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cand = joined.select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+    ).distinct()
     # exact verify: the true shared count over the GUARDED key set (the
     # same |∩| the direct operator counts), denominator = full |sh(A)|
     shared = (
@@ -1336,8 +1280,10 @@ def q_docs_substring_dedup_keep_one(
     per-hash window sort, so a boilerplate run repeated 10⁸ times costs
     two counters, not a 10⁸-row single-key sort. The mark join and the
     cut tail are shared with the other variants."""
-    d = load(spark, sf_dir, "documents")
-    wins = _substr_wins(load(spark, sf_dir, "documents", fan_out=True))
+    # one fan-out load feeds both the window hashing and the cut tail
+    # (interleaved A/B vs a separate plain load for the tail: no slowdown)
+    d = load(spark, sf_dir, "documents", fan_out=True)
+    wins = _substr_wins(d)
     k1 = (
         wins.groupBy("wh")
         .agg(F.count(F.lit(1)).alias("c"), F.min("doc_id").alias("kd"))
@@ -1480,26 +1426,17 @@ def q_docs_winnow_pairs(
     any pair sharing a K+W-1-token run appears here.
 
     Scale shape: the self-join runs on the (doc_id, fp_hash)-distinct
-    fingerprint table through ``drop_oversized_buckets`` on fp_hash —
+    fingerprint table through ``guarded_self_join`` on fp_hash —
     the join's own shuffle key (house rule: a hash shared by more docs
     than the cap is boilerplate, non-discriminative by definition, and
     would go quadratic); the pair count is one hash aggregation on the
     uniform (doc_a, doc_b) key. The fingerprint table is ~2/(W+1) of
     the k-gram volume, so this joins a principled SAMPLE of the corpus,
     not its every window (the ExactSubstr reporter covers that need)."""
-    fps = (
-        q_docs_winnow_fingerprints(spark, sf_dir)
-        .select("doc_id", "fp_hash")
-        .distinct()
-        .persist()  # guard occupancy agg + both join sides
-    )
-    g = drop_oversized_buckets(fps, ("fp_hash",), bucket_cap, "winnow_pairs")
-    a = g.select(F.col("doc_id").alias("doc_a"), "fp_hash")
-    b = g.select(F.col("doc_id").alias("doc_b"), "fp_hash")
+    fps = q_docs_winnow_fingerprints(spark, sf_dir).select("doc_id", "fp_hash").distinct()
     return (
-        a.join(b, "fp_hash")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
+        guarded_self_join(fps, ("fp_hash",), "doc_id", bucket_cap, "winnow_pairs")
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_shared_fps"))
     )
 

@@ -2401,7 +2401,7 @@ def q_docs_decontaminate(
     # with the tokenization hoisted to its own projection (see
     # dedup._SHINGLE_OVER_TOKENS for why inlining is O(words²)/doc)
     from pdfplucker_spark.operators.dedup import _SHINGLE_OVER_TOKENS
-    from pdfplucker_spark.plans.guards import drop_oversized_buckets
+    from pdfplucker_spark.plans.guards import guarded_probe
 
     # fan_out: the corpus-wide shingle explode feeding the persisted frame
     # is heavy pre-exchange map work (interleaved A/B: 1.66 -> 1.39 s min)
@@ -2422,15 +2422,20 @@ def q_docs_decontaminate(
         )
         .persist()
     )
-    ex = drop_oversized_buckets(ex, ("g",), df_cap, "docs_decontaminate")
-    eval_side = ex.where(F.col("is_eval")).select(
-        F.col("doc_id").alias("eval_doc_id"), "g"
-    )
-    train_side = ex.where(~F.col("is_eval")).select(
-        F.col("doc_id").alias("train_doc_id"), "g"
+
+    def side(pred, name):
+        return ex.where(pred).select(F.col("doc_id").alias(name), "g")
+
+    # the cap counts corpus-wide document frequency (the oracle's `ok`)
+    screen = guarded_probe(
+        side(F.col("is_eval"), "eval_doc_id"),
+        ("g",),
+        df_cap,
+        "docs_decontaminate",
+        counted=ex,
     )
     return (
-        train_side.join(eval_side, "g")
+        screen(side(~F.col("is_eval"), "train_doc_id"))
         .groupBy("train_doc_id", "eval_doc_id")
         .agg(F.count("*").alias("n_shared_ngrams"))
         .where(F.col("n_shared_ngrams") >= DECONTAM_MIN_SHARED)
@@ -2689,7 +2694,7 @@ def q_docs_decontaminate_incremental(
     operator's rows restricted to batch docs (asserted by pytest — the
     caps never fire on the driver corpora)."""
     from pdfplucker_spark.operators.dedup import _SHINGLE_OVER_TOKENS
-    from pdfplucker_spark.plans.guards import drop_oversized_buckets
+    from pdfplucker_spark.plans.guards import guarded_probe
 
     d = load(spark, sf_dir, "documents")
     gate = md5_long(F.concat("source", F.lit(":"), F.col("doc_id").cast("string")))
@@ -2719,7 +2724,7 @@ def q_docs_decontaminate_incremental(
         )
         .persist()
     )
-    eval_ix = drop_oversized_buckets(
+    screen = guarded_probe(
         ex.where(F.col("is_eval")).select(F.col("doc_id").alias("eval_doc_id"), "g"),
         ("g",),
         df_cap,
@@ -2729,7 +2734,7 @@ def q_docs_decontaminate_incremental(
         F.col("doc_id").alias("train_doc_id"), "g"
     )
     return (
-        batch.join(eval_ix, "g")
+        screen(batch)
         .groupBy("train_doc_id", "eval_doc_id")
         .agg(F.count("*").alias("n_shared_ngrams"))
         .where(F.col("n_shared_ngrams") >= DECONTAM_MIN_SHARED)

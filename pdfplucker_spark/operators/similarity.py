@@ -35,7 +35,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pdfplucker_spark.functions.hashing import md5_long, sql_md5_long
-from pdfplucker_spark.plans.guards import DEFAULT_BUCKET_CAP, drop_oversized_buckets
+from pdfplucker_spark.plans.guards import DEFAULT_BUCKET_CAP, guarded_self_join
 from pdfplucker_spark.sources.tables import load
 
 TOP_K = 10
@@ -215,23 +215,19 @@ def q_sim_cosine_dup_pairs(
     deduplicated, then verified with the exact cosine. Double accumulation
     is sequential in both engines so values match bit-for-bit.
 
-    keys is persisted: it feeds BOTH sides of the self-join (and the bucket
-    guard) — unpersisted, each consumer re-evaluates 16 interpreted
-    higher-order plane-dot folds over the corpus. Over-capacity buckets are
-    dropped-and-logged (``bucket_cap``) so a degenerate corpus cannot make
-    the within-bucket self-join quadratic."""
+    The guarded self-join persists the keys frame: it feeds BOTH join
+    sides and the bucket guard — unpersisted, each consumer re-evaluates
+    16 interpreted plane-dot folds over the corpus. Over-capacity buckets
+    are dropped-and-logged (``bucket_cap``) so a degenerate corpus cannot
+    make the within-bucket self-join quadratic."""
     emb = load(spark, sf_dir, "embeddings")
-    keys = _lsh_keys(emb).persist()
-    keys = drop_oversized_buckets(
-        keys, ("lsh_table", "bucket"), bucket_cap, "sim_cosine_dup_pairs"
-    )
-    a, b = keys.alias("a"), keys.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.lsh_table") == F.col("b.lsh_table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        guarded_self_join(
+            _lsh_keys(emb),
+            ("lsh_table", "bucket"),
+            "vec_id",
+            bucket_cap,
+            "sim_cosine_dup_pairs",
         )
         .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
         .distinct()
@@ -1654,17 +1650,11 @@ def _semdedup_tail(emb, cents, cluster_cap, log_label):
     # scan and both verify sides
     emb = emb.persist()
     # assigned feeds the guard, BOTH self-join aliases and the final output
-    assigned = _ivf_assigned_with(emb, cents).persist()
-    blocked = drop_oversized_buckets(assigned, ("cid",), cluster_cap, log_label)
-    a, b = blocked.alias("a"), blocked.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.cid") == F.col("b.cid"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-    )
+    # (the kernel persists it; the output join reads the same cache)
+    assigned = _ivf_assigned_with(emb, cents)
+    cand = guarded_self_join(
+        assigned, ("cid",), "vec_id", cluster_cap, log_label
+    ).select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
     pairs = _exact_cosine_pairs(emb, cand, COSINE_DUP_THRESHOLD).select(
         F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
     )

@@ -1,20 +1,36 @@
-"""Shuffle-skew guards for LSH candidate self-joins.
+"""Guarded candidate joins: the one kernel behind every LSH band, shingle,
+fingerprint and cluster-blocking pair join.
 
-A banded-LSH pair stage joins a key table to itself on the band key; its
-cost is sum(occupancy^2) over buckets. On honest corpora occupancy tracks
-near-dup cluster size (BENCH/PLANS.md capacity math), but a degenerate
-corpus — boilerplate-heavy crawl, constant column — collapses into a few
-giant buckets and the within-bucket self-join goes quadratic. A bucket that
-large is non-discriminative BY DEFINITION (everything matches everything:
-it carries no similarity signal), so the scale-correct move is to drop it,
-loudly, before the join.
+A candidate join's cost is sum(occupancy^2) over its keys. On honest
+corpora occupancy tracks near-dup cluster size (BENCH/PLANS.md capacity
+math), but a degenerate corpus — boilerplate-heavy crawl, constant column —
+collapses into a few giant keys and the within-key join goes quadratic. A
+key that common carries no similarity signal (everything matches
+everything), so the scale-correct move is to drop it, loudly, before the
+join. Three shapes cover the operators: ``guarded_self_join``,
+``guarded_probe`` (probe rows vs a standing index) and
+``guarded_prefix_join`` (rarest-first PPJoin prefixes). All of them hold:
+
+- the guard counts occupancy on the join's OWN key;
+- over-cap keys leave by broadcast LEFT ANTI join against the dropped set,
+  bounded by construction (at most sum(occ)/cap keys exceed the cap) —
+  never by an inner join against the corpus-scale surviving set. Only the
+  prefix shape joins its counts back, because its rank needs each key's
+  document frequency;
+- NULL keys never equi-join: NULL-keyed rows pass the guard and are not
+  counted as dropped — exact because every join here is an equi-join on
+  the key.
+
+Drops are counted and logged — silence would read as full recall when it
+isn't. ``cap=None`` disables the drop.
 """
 
 from __future__ import annotations
 
 import logging
+from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 log = logging.getLogger(__name__)
 
@@ -24,86 +40,128 @@ log = logging.getLogger(__name__)
 DEFAULT_BUCKET_CAP = 100_000
 
 
-def drop_oversized_buckets(
-    keys: DataFrame,
-    key_cols: tuple[str, ...],
-    cap: int | None,
-    log_label: str,
-    with_occupancy: bool = False,
-):
-    """Drop rows of bucket keys whose occupancy exceeds ``cap``.
-
-    One counting aggregation on the SAME shuffle key as the downstream
-    candidate join (the exchange is reused), then an inner join keeps only
-    rows of surviving buckets. Dropped buckets are counted and logged —
-    silence here would read as full recall when it isn't. ``keys`` should be
-    persisted by the caller (the guard is its second consumer); the
-    occupancy frame (one row per distinct bucket key) is persisted HERE so
-    the logging count and the filtering join share one aggregation pass
-    instead of recomputing it per consumer. Note the occupancy frame's
-    cardinality is the DISTINCT-key count — tiny for banded LSH (2^r per
-    table) but corpus-scale for raw-shingle guards (decontaminate /
-    containment); MEMORY_AND_DISK default spills it, and the downstream
-    join needs that frame materialized regardless, so the persist trades
-    no extra state for one saved aggregation pass.
-
-    ``with_occupancy=True`` additionally returns the SURVIVING occupancy
-    frame ``(key_cols..., _occ)`` — for callers that need the counts
-    themselves (e.g. the prefix filters rank shingles by document
-    frequency): one shared aggregation instead of the caller recomputing
-    it beside the guard. In that mode the filtered frame also CARRIES the
-    ``_occ`` column (the filtering join has it in hand anyway), so callers
-    ranking by occupancy need no second join against the counts.
-
-    Contract note: ``cap=None`` disables the *drop*, but with
-    ``with_occupancy=True`` the returned frame is still ``keys`` inner-joined
-    to the occupancy counts — the schema gains ``_occ`` and any NULL-valued
-    key rows are dropped by the join (NULL never equi-joins NULL). Current
-    callers build shingle/band keys that are never NULL, so this only
-    matters to a future caller that can carry NULL keys: such a caller must
-    pre-filter or use ``with_occupancy=False`` (true pass-through)."""
-    cols = list(key_cols)
-    if cap is None:
-        if not with_occupancy:
-            return keys
-        occ = keys.groupBy(*cols).agg(F.count("*").alias("_occ")).persist()
-        return keys.join(occ, cols), occ
-    if not with_occupancy:
-        # Filter by broadcast ANTI-join against the OVER-cap key set instead
-        # of an inner join against the (corpus-scale, for raw-shingle
-        # guards) surviving set: at most sum(occ)/cap keys can exceed the
-        # cap, so the dropped set is bounded and broadcastable by
-        # construction, and ``keys`` never pays a join-back shuffle — the
-        # guard is one counting aggregation plus a map-side filter. Row
-        # semantics vs the inner-join form: identical for every non-NULL
-        # key; NULL-keyed rows (null-text docs in the *_nulls variants) are
-        # now KEPT, which downstream candidate equi-joins drop anyway —
-        # NULL never equi-joins NULL (the documented dedup-family policy).
-        dropped = (
-            keys.groupBy(*cols)
-            .agg(F.count("*").alias("_occ"))
-            .where(F.col("_occ") > cap)
-            .persist()
-        )
-        n_dropped = dropped.count()
-        if n_dropped:
-            log.warning(
-                "%s: dropped %d over-capacity LSH buckets (cap=%d) — "
-                "non-discriminative keys excluded from the candidate join",
-                log_label,
-                n_dropped,
-                cap,
-            )
-        return keys.join(F.broadcast(dropped.select(*cols)), cols, "left_anti")
-    occ = keys.groupBy(*cols).agg(F.count("*").alias("_occ")).persist()
-    n_dropped = occ.where(F.col("_occ") > cap).count()
+def _log_drops(over_cap: DataFrame, cols: list[str], cap: int, log_label: str) -> None:
+    n_dropped = over_cap.dropna(subset=cols).count()  # a NULL key is no drop
     if n_dropped:
         log.warning(
-            "%s: dropped %d over-capacity LSH buckets (cap=%d) — "
+            "%s: dropped %d over-capacity buckets (cap=%d) — "
             "non-discriminative keys excluded from the candidate join",
             log_label,
             n_dropped,
             cap,
         )
-    surviving = occ.where(F.col("_occ") <= cap)
-    return keys.join(surviving, cols), surviving
+
+
+def _drop_oversized_buckets(
+    keys: DataFrame,
+    key_cols: list[str],
+    cap: int | None,
+    log_label: str,
+    counted: DataFrame | None = None,
+) -> DataFrame:
+    """``keys`` minus the rows whose key occupancy in ``counted`` (default
+    ``keys``) exceeds ``cap``. The over-cap set is persisted: the log count
+    and the broadcast share one aggregation."""
+    if cap is None:
+        return keys
+    dropped = (
+        (keys if counted is None else counted)
+        .groupBy(*key_cols)
+        .agg(F.count("*").alias("_occ"))
+        .where(F.col("_occ") > cap)
+        .persist()
+    )
+    _log_drops(dropped, key_cols, cap, log_label)
+    return keys.join(F.broadcast(dropped.select(*key_cols)), key_cols, "left_anti")
+
+
+def _pair(id_col: str, asymmetric: bool):
+    """Each unordered pair once, or both orders for a directional measure."""
+    a, b = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    return a != b if asymmetric else a < b
+
+
+def guarded_self_join(
+    keys: DataFrame,
+    key_cols: tuple[str, ...],
+    id_col: str,
+    cap: int | None,
+    log_label: str,
+    asymmetric: bool = False,
+) -> DataFrame:
+    """``keys`` guarded and joined to itself on ``key_cols`` under
+    ``a.id < b.id`` (``!=`` if ``asymmetric``), sides aliased ``a`` and
+    ``b``; a pair appears once per shared key, so callers dedupe or count.
+    ``keys`` is persisted here (count and both sides read it)."""
+    cols = list(key_cols)
+    g = _drop_oversized_buckets(keys.persist(), cols, cap, log_label)
+    a, b = g.alias("a"), g.alias("b")
+    on = reduce(lambda x, y: x & y, (F.col(f"a.{c}") == F.col(f"b.{c}") for c in cols))
+    return a.join(b, on & _pair(id_col, asymmetric))
+
+
+def guarded_probe(
+    index: DataFrame,
+    key_cols: tuple[str, ...],
+    cap: int | None,
+    log_label: str,
+    counted: DataFrame | None = None,
+):
+    """Guard a standing ``index`` once; returns ``probe -> probe ⋈ index``
+    on ``key_cols``, so every wave of a stream shares the one guard.
+    ``counted`` widens the occupancy count when probe and index are slices
+    of one capped frame; dropping from the index side alone is then exact,
+    as probe rows only meet the index through the equi-join. ``index`` is
+    not persisted: every caller's is a file scan or a slice of a frame the
+    caller persists for its probe side."""
+    cols = list(key_cols)
+    ix = _drop_oversized_buckets(index, cols, cap, log_label, counted)
+    return lambda probe: probe.join(ix, cols)
+
+
+def guarded_prefix_join(
+    ex: DataFrame,
+    key: str,
+    id_col: str,
+    threshold: float,
+    cap: int | None,
+    log_label: str,
+    asymmetric: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """Rarest-first PPJoin prefix join over ``ex`` = (``id_col``, ``key``,
+    ``sz``): one row per document per DISTINCT key, so a key's row count
+    is its document frequency, and ``sz`` the document's full key count.
+    A document's prefix is its keys ranked by (df, key) ascending with
+    ``r <= sz - ceil(threshold * sz) + 1``; ranking only surviving keys
+    while bounding with the full ``sz`` only lengthens it, so the filter
+    stays lossless under the cap. Symmetric measures join prefix to prefix
+    under ``a < b``; ``asymmetric`` containment joins A's prefix to B's
+    whole guarded index under ``a != b``.
+
+    Returns ``(joined, index)``: ``joined`` has aliases ``a`` (``id_col``,
+    ``key``, ``r``, ``sz``) and ``b``; ``index`` is the guarded
+    (``id_col``, ``key``) frame for an exact verify. ``ex`` and the ``b``
+    side (the prefix itself when symmetric) are persisted here."""
+    ex = ex.persist()
+    occ = ex.groupBy(key).agg(F.count("*").alias("_occ")).persist()
+    if cap is not None:
+        _log_drops(occ.where(F.col("_occ") > cap), [key], cap, log_label)
+        occ = occ.where(F.col("_occ") <= cap)
+    guarded = ex.join(occ, key)
+    prefix = (
+        guarded.withColumn(
+            "r",
+            F.row_number().over(
+                Window.partitionBy(id_col).orderBy(F.asc("_occ"), F.asc(key))
+            ),
+        )
+        .where(F.col("r") <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1)
+        .select(id_col, key, "r", "sz")
+    )
+    index = guarded.select(id_col, key)
+    if asymmetric:
+        index = b = index.persist()
+    else:
+        prefix = b = prefix.persist()
+    joined = prefix.alias("a").join(b.alias("b"), key).where(_pair(id_col, asymmetric))
+    return joined, index

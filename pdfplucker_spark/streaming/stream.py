@@ -866,10 +866,7 @@ def stream_dedup_incremental(
         _sig_cols,
         _verify_jaccard,
     )
-    from pdfplucker_spark.plans.guards import (
-        DEFAULT_BUCKET_CAP,
-        drop_oversized_buckets,
-    )
+    from pdfplucker_spark.plans.guards import DEFAULT_BUCKET_CAP, guarded_probe
 
     index_dir = output_dir + "_index"
 
@@ -932,29 +929,19 @@ def stream_dedup_incremental(
             if band_paths:
                 ib = sp.read.parquet(*band_paths)
                 it = sp.read.parquet(*_index_wave_paths(index_dir, bno, "toks"))
-                # the standing guard invariant (CLAUDE.md): every LSH
-                # candidate join crosses drop_oversized_buckets. Capping
-                # the INDEX side bounds the per-wave join at
-                # wave_size × cap even on a degenerate corpus (the wave
-                # side is already bounded by the wave itself); the cap
-                # never fires on honest corpora, so the oracle is
+                # the guarded-join invariant (CLAUDE.md): capping the INDEX
+                # side bounds the per-wave join at wave_size × cap even on
+                # a degenerate corpus (the wave bounds its own side); the
+                # cap never fires on honest corpora, so the oracle is
                 # unchanged — same treatment as dedup_incremental
-                ib_ok = drop_oversized_buckets(
-                    ib.select(
-                        F.col("doc_id").alias("index_doc_id"), "band", "key"
-                    ),
+                screen = guarded_probe(
+                    ib.select(F.col("doc_id").alias("index_doc_id"), "band", "key"),
                     ("band", "key"),
                     DEFAULT_BUCKET_CAP,
                     "stream_dedup_incremental",
                 )
-                cand = (
-                    bands.select(
-                        F.col("doc_id").alias("batch_doc_id"), "band", "key"
-                    )
-                    .join(ib_ok, ["band", "key"])
-                    .select("batch_doc_id", "index_doc_id")
-                    .distinct()
-                )
+                probe = bands.select(F.col("doc_id").alias("batch_doc_id"), "band", "key")
+                cand = screen(probe).select("batch_doc_id", "index_doc_id").distinct()
                 all_toks = toks.unionByName(it)
                 res = _verify_jaccard(
                     cand, all_toks, "batch_doc_id", "index_doc_id",
@@ -1021,21 +1008,22 @@ def stream_decontaminate_incremental(
         DECONTAM_DF_CAP,
         DECONTAM_MIN_SHARED,
     )
-    from pdfplucker_spark.plans.guards import drop_oversized_buckets
+    from pdfplucker_spark.plans.guards import guarded_probe
 
-    # the standing index: built ONCE from the staged eval docs, persisted —
-    # every micro-batch joins this cached frame instead of re-shingling
-    eval_ix = drop_oversized_buckets(
+    # the standing index: built ONCE from the staged eval docs, persisted
+    # and guarded — every micro-batch probes it instead of re-shingling
+    screen = guarded_probe(
         spark.read.parquet(input_dir + "_eval")
         .select(
             F.col("doc_id").alias("eval_doc_id"),
             F.split("text", " ").alias("__tk"),
         )
-        .select("eval_doc_id", F.explode(F.expr(_SHINGLE_OVER_TOKENS)).alias("g")),
+        .select("eval_doc_id", F.explode(F.expr(_SHINGLE_OVER_TOKENS)).alias("g"))
+        .persist(),
         ("g",),
         DECONTAM_DF_CAP,
         "stream_decontaminate_incremental",
-    ).persist()
+    )
 
     src = (
         spark.readStream.schema(
@@ -1065,7 +1053,7 @@ def stream_decontaminate_incremental(
                 )
             )
             res = (
-                sh.join(eval_ix, "g")
+                screen(sh)
                 .groupBy("train_doc_id", "eval_doc_id")
                 .agg(F.count("*").alias("n_shared_ngrams"))
                 .where(F.col("n_shared_ngrams") >= DECONTAM_MIN_SHARED)

@@ -497,3 +497,116 @@ def test_cms_and_entropy_plans_broadcast_or_joinless(spark):
     assert "BroadcastHashJoin" in plan
     plan = _plan(q_docs_token_entropy(spark, SF))
     assert "Join" not in plan, plan[:2000]
+
+
+# ---------------------------------------------------------------------------
+# the guarded candidate-join kernel (plans/guards.py): every guarded pair
+# operator inherits these plan properties, so they are pinned once here
+# ---------------------------------------------------------------------------
+def _nodes(plan: str) -> list[tuple[int, str, str]]:
+    """(indent, operator name, line) for every operator line of a plan."""
+    import re
+
+    out = []
+    for line in plan.splitlines():
+        m = re.match(r"([\s:|+-]*)(?:\*\(\d+\)\s*)?([A-Za-z]\w*)", line)
+        if m:
+            out.append((len(m.group(1)), m.group(2), line))
+    return out
+
+
+def _assert_guarded_join_shape(plan: str, pair: str, anti: bool = True) -> None:
+    """One occupancy aggregate; over-cap keys leave through a LeftAnti join
+    fed by a BroadcastExchange (``anti``) — or, for the prefix shape, no
+    anti-join at all; no nested-loop or cartesian join; and the ``pair``
+    predicate sits below the distinct, i.e. is applied before it."""
+    import re
+
+    nodes = _nodes(plan)
+    # one aggregate: the log count and every join side share its cache
+    occ = set(re.findall(r"functions=\[count\(1\)\], output=\[[^\]]*_occ#(\d+)", plan))
+    assert len(occ) == 1, plan[:4000]
+    assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
+    antis = [i for i, (_, name, line) in enumerate(nodes)
+             if name.endswith("Join") and "LeftAnti" in line]
+    assert bool(antis) == anti, plan[:4000]
+    for i in antis:
+        ind = nodes[i][0]
+        kids = []
+        for c, name, _ in nodes[i + 1:]:
+            if c <= ind:
+                break
+            if c == ind + 3:
+                kids.append(name)
+        assert "BroadcastExchange" in kids, (kids, plan[:4000])
+    top = next(i for i, (_, name, line) in enumerate(nodes)
+               if name == "HashAggregate" and "functions=[]" in line)
+    hits = [i for i, (_, _, line) in enumerate(nodes) if re.search(pair, line)]
+    assert hits and all(i > top and nodes[i][0] > nodes[top][0] for i in hits), plan[:4000]
+
+
+def _keys_frame(spark):
+    # 40 keys of 50 rows each: the cap of 30 drops every key, the plan is
+    # the same either way
+    return spark.range(2000).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 40).alias("k"),
+        (F.col("id") % 10 == 0).alias("is_index"),
+    )
+
+
+def test_guarded_self_join_plan_shape(spark):
+    from pdfplucker_spark.plans.guards import guarded_self_join
+
+    spark.catalog.clearCache()
+    cand = (
+        guarded_self_join(_keys_frame(spark), ("k",), "doc_id", 30, "pin")
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+    _assert_guarded_join_shape(_plan(cand), r"doc_id#\d+L? < doc_id#\d+L?")
+    spark.catalog.clearCache()
+
+
+def test_guarded_probe_plan_shape(spark):
+    from pdfplucker_spark.plans.guards import guarded_probe
+
+    spark.catalog.clearCache()
+    keys = _keys_frame(spark).persist()
+    screen = guarded_probe(
+        keys.where("is_index").select(F.col("doc_id").alias("index_doc_id"), "k"),
+        ("k",),
+        30,
+        "pin",
+        counted=keys,
+    )
+    cand = (
+        screen(keys.where(~F.col("is_index")).select(F.col("doc_id").alias("probe_doc_id"), "k"))
+        .select("probe_doc_id", "index_doc_id")
+        .distinct()
+    )
+    _assert_guarded_join_shape(_plan(cand), r"NOT is_index#\d+")
+    spark.catalog.clearCache()
+
+
+def test_guarded_prefix_join_plan_shape(spark):
+    from pdfplucker_spark.operators.dedup import shingles_frame
+    from pdfplucker_spark.plans.guards import guarded_prefix_join
+    from pdfplucker_spark.sources.tables import load
+
+    spark.catalog.clearCache()
+    ex = shingles_frame(load(spark, SF, "documents")).select(
+        "doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("g")
+    )
+    for asymmetric in (False, True):
+        joined, _ = guarded_prefix_join(ex, "g", "doc_id", 0.35, 100, "pin", asymmetric)
+        cand = joined.select(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        ).distinct()
+        pair = (
+            r"NOT \(doc_id#\d+L? = doc_id#\d+L?\)"
+            if asymmetric
+            else r"doc_id#\d+L? < doc_id#\d+L?"
+        )
+        _assert_guarded_join_shape(_plan(cand), pair, anti=False)
+    spark.catalog.clearCache()

@@ -13,9 +13,9 @@ import logging
 import pytest
 from pyspark.sql import Row, functions as F
 
+from pdfplucker_spark.operators import dedup, pipeline, similarity
 from pdfplucker_spark.operators.dedup import q_dedup_ngram_pairs
 from pdfplucker_spark.operators.pipeline import connected_components
-from pdfplucker_spark.operators.similarity import q_sim_cosine_dup_pairs
 
 BOILERPLATE = "terms of service apply to all users of this site please read carefully"
 
@@ -34,17 +34,92 @@ def _write_degenerate_docs(spark, path: str, n: int = 400) -> None:
     spark.createDataFrame(rows).write.parquet(f"{path}/documents.parquet")
 
 
-def test_ngram_bucket_guard_bounds_degenerate_corpus(spark, tmp_path, caplog):
-    """400 identical boilerplate docs: every band key has occupancy 400 —
-    unguarded, the self-join is ~400^2/2 * 8 bands of candidates. With the
-    cap, the non-discriminative buckets are dropped (logged) and the
-    operator returns no pairs instead of going quadratic."""
-    _write_degenerate_docs(spark, str(tmp_path))
+def _write_degenerate_embeddings(spark, path: str, n: int = 400) -> None:
+    rows = [Row(vec_id=i, embedding=[0.5] * 64, label=0) for i in range(n)]
+    spark.createDataFrame(rows).selectExpr(
+        "vec_id", "cast(embedding as array<float>) embedding", "label"
+    ).write.parquet(f"{path}/embeddings.parquet")
+
+
+# (log label, degenerate corpus, guarded operator, bounded output size).
+# Every key of a constant corpus has occupancy 400 (docs_decontaminate_
+# incremental's cap counts the ~40-doc eval stratum only); unguarded, each
+# join is ~400²/2 rows per key. With the cap, every key is dropped and
+# logged: pair operators return nothing, SemDeDup keeps every vector as
+# its own canonical.
+_DEGENERATE = [
+    ("dedup_minhash_pairs", "docs",
+     lambda s, p: dedup.q_dedup_minhash_pairs(s, p, bucket_cap=100), 0),
+    ("dedup_simhash_pairs", "docs",
+     lambda s, p: dedup.q_dedup_simhash_pairs(s, p, bucket_cap=100), 0),
+    ("dedup_ngram_pairs", "docs",
+     lambda s, p: dedup.q_dedup_ngram_pairs(s, p, bucket_cap=100), 0),
+    ("dedup_containment_pairs", "docs",
+     lambda s, p: dedup.q_dedup_containment_pairs(s, p, df_cap=100), 0),
+    ("dedup_containment_prefix", "docs",
+     lambda s, p: dedup.q_dedup_containment_prefix(s, p, df_cap=100), 0),
+    ("winnow_pairs", "docs",
+     lambda s, p: dedup.q_docs_winnow_pairs(s, p, bucket_cap=100), 0),
+    ("dedup_incremental", "docs",
+     lambda s, p: dedup.q_dedup_incremental(s, p, bucket_cap=100), 0),
+    ("docs_decontaminate", "docs",
+     lambda s, p: pipeline.q_docs_decontaminate(s, p, df_cap=50), 0),
+    ("docs_decontaminate_incremental", "docs",
+     lambda s, p: pipeline.q_docs_decontaminate_incremental(s, p, df_cap=10), 0),
+    ("sim_cosine_dup_pairs", "embeddings",
+     lambda s, p: similarity.q_sim_cosine_dup_pairs(s, p, bucket_cap=100), 0),
+    ("sim_semdedup", "embeddings",
+     lambda s, p: similarity.q_sim_semdedup(s, p, cluster_cap=100), 400),
+]
+
+
+@pytest.mark.parametrize(
+    "label,corpus,run,n_rows", _DEGENERATE, ids=[c[0] for c in _DEGENERATE]
+)
+def test_guard_bounds_degenerate_corpus(spark, tmp_path, caplog, label, corpus, run, n_rows):
+    """A constant corpus collapses every blocking key into one giant
+    bucket: each guarded operator must return a bounded result instead of
+    going quadratic, and say so — a drop logged under its own label."""
+    write = _write_degenerate_docs if corpus == "docs" else _write_degenerate_embeddings
+    write(spark, str(tmp_path))
     with caplog.at_level(logging.WARNING, logger="pdfplucker_spark.plans.guards"):
-        out = q_dedup_ngram_pairs(spark, str(tmp_path), bucket_cap=100)
-        assert out.count() == 0
-    assert any("dedup_ngram_pairs" in r.message and "dropped" in r.message
-               for r in caplog.records)
+        rows = run(spark, str(tmp_path)).collect()
+    assert len(rows) == n_rows
+    # SemDeDup: no candidate pairs, so every vector is its own canonical
+    assert all(r.asDict().get("keep", True) for r in rows)
+    assert any(
+        r.message.startswith(f"{label}: dropped") for r in caplog.records
+    ), [r.message for r in caplog.records]
+
+
+def test_guard_log_counts_only_non_null_buckets(spark, caplog):
+    """NULL keys never equi-join, so the guard keeps NULL-keyed rows — an
+    over-cap NULL bucket is therefore no drop, and the logged count must be
+    exactly the over-cap buckets with a non-NULL key. The null-text docs
+    of the *_nulls corpus share one NULL band key per band, over cap=1."""
+    import re
+
+    from pdfplucker_spark.operators.dedup import _band_rows, _sig_cols, docs_with_nulls
+    from pdfplucker_spark.sources.tables import load
+    from tests.test_plan_properties import SF as sf
+
+    cap = 1
+    occ = (
+        _band_rows(docs_with_nulls(load(spark, sf, "documents")).select("doc_id", *_sig_cols()))
+        .groupBy("band", "key")
+        .count()
+        .where(F.col("count") > cap)
+    )
+    assert occ.where(F.col("key").isNull()).count() > 0  # NULL buckets over cap
+    expected = occ.where(F.col("key").isNotNull()).count()
+    with caplog.at_level(logging.WARNING, logger="pdfplucker_spark.plans.guards"):
+        dedup.q_dedup_minhash_pairs_nulls(spark, sf, bucket_cap=cap).collect()
+    logged = [
+        int(m.group(1))
+        for r in caplog.records
+        if (m := re.match(r"dedup_minhash_pairs: dropped (\d+)", r.message))
+    ]
+    assert logged == ([expected] if expected else []), (logged, expected)
 
 
 def test_ngram_bucket_guard_silent_on_honest_corpus(spark):
@@ -55,39 +130,6 @@ def test_ngram_bucket_guard_silent_on_honest_corpus(spark):
     unguarded = q_dedup_ngram_pairs(spark, sf, bucket_cap=None)
     assert guarded.exceptAll(unguarded).count() == 0
     assert unguarded.exceptAll(guarded).count() == 0
-
-
-def test_sim_bucket_guard_bounds_degenerate_embeddings(spark, tmp_path, caplog):
-    """400 identical embeddings land in the same bucket of every LSH table;
-    the cap drops those buckets so the candidate join stays bounded."""
-    vec = [0.5] * 64
-    rows = [Row(vec_id=i, embedding=vec, label=0) for i in range(400)]
-    spark.createDataFrame(rows).selectExpr(
-        "vec_id", "cast(embedding as array<float>) embedding", "label"
-    ).write.parquet(f"{tmp_path}/embeddings.parquet")
-    with caplog.at_level(logging.WARNING, logger="pdfplucker_spark.plans.guards"):
-        out = q_sim_cosine_dup_pairs(spark, str(tmp_path), bucket_cap=100)
-        assert out.count() == 0
-    assert any("sim_cosine_dup_pairs" in r.message for r in caplog.records)
-
-
-def test_decontaminate_df_cap_bounds_boilerplate_corpus(spark, tmp_path, caplog):
-    """400 docs sharing the same boilerplate text: every shingle has
-    document frequency 400, so the unguarded train⋈eval shingle join fans
-    out df_train×df_eval per key (~360×40 per shingle — quadratic on a hot
-    key at corpus scale). With the df cap, the non-discriminative shingles
-    are dropped-and-logged and the join produces nothing instead of
-    exploding."""
-    from pdfplucker_spark.operators.pipeline import q_docs_decontaminate
-
-    _write_degenerate_docs(spark, str(tmp_path))
-    with caplog.at_level(logging.WARNING, logger="pdfplucker_spark.plans.guards"):
-        out = q_docs_decontaminate(spark, str(tmp_path), df_cap=50)
-        assert out.count() == 0
-    assert any(
-        "docs_decontaminate" in r.message and "dropped" in r.message
-        for r in caplog.records
-    )
 
 
 def test_decontaminate_df_cap_silent_on_honest_corpus(spark):
@@ -241,25 +283,6 @@ def test_ngram_prefix_filter_is_lossless(spark):
     assert prefix.exceptAll(brute).count() == 0
 
 
-def test_semdedup_cluster_guard_bounds_degenerate_embeddings(spark, tmp_path, caplog):
-    """400 identical embeddings collapse into one k-means cluster; the
-    cluster-occupancy cap drops it so the within-cluster self-join stays
-    bounded — every vector is then its own component (all kept)."""
-    from pdfplucker_spark.operators.similarity import q_sim_semdedup
-
-    vec = [0.5] * 64
-    rows = [Row(vec_id=i, embedding=vec, label=0) for i in range(400)]
-    spark.createDataFrame(rows).selectExpr(
-        "vec_id", "cast(embedding as array<float>) embedding", "label"
-    ).write.parquet(f"{tmp_path}/embeddings.parquet")
-    with caplog.at_level(logging.WARNING, logger="pdfplucker_spark.plans.guards"):
-        out = q_sim_semdedup(spark, str(tmp_path), cluster_cap=100).collect()
-    assert len(out) == 400
-    assert all(r.keep for r in out)  # no pairs -> every vector canonical
-    assert any("sim_semdedup" in r.message and "dropped" in r.message
-               for r in caplog.records)
-
-
 def test_semdedup_keeps_one_canonical_per_component(spark):
     """On the real corpus: keep-set = exactly the distinct component
     labels, and every dropped vector shares a component with its keeper."""
@@ -385,24 +408,6 @@ def test_simhash_pairs_complete_vs_bruteforce(spark):
     assert got == expect
 
 
-def test_simhash_bucket_guard_bounds_degenerate_corpus(spark, tmp_path, caplog):
-    """400 identical boilerplate docs share ONE fingerprint: all 20 block
-    tables collapse to a single bucket of occupancy 400 — unguarded, the
-    self-join is ~400²/2 × 20 tables of candidates. With the cap, the
-    non-discriminative buckets are dropped (logged) and the operator
-    returns no pairs instead of going quadratic."""
-    from pdfplucker_spark.operators.dedup import q_dedup_simhash_pairs
-
-    _write_degenerate_docs(spark, str(tmp_path))
-    with caplog.at_level(logging.WARNING, logger="pdfplucker_spark.plans.guards"):
-        out = q_dedup_simhash_pairs(spark, str(tmp_path), bucket_cap=100)
-        assert out.count() == 0
-    assert any(
-        "dedup_simhash_pairs" in r.message and "dropped" in r.message
-        for r in caplog.records
-    )
-
-
 def test_simhash_bucket_guard_silent_on_honest_corpus(spark):
     """The default cap must never fire on the driver corpus: guarded and
     unguarded results are identical at sf0.001."""
@@ -435,3 +440,30 @@ def test_simhash_pairs_null_docs_produce_no_pairs(spark):
     }
     assert with_nulls == plain
     assert not any(a >= 10_000_000 or b >= 10_000_000 for a, b, _ in with_nulls)
+
+
+def test_operators_reach_the_guard_only_through_the_kernel():
+    """Every guarded candidate join goes through the plans/guards kernel:
+    no operator or streaming module may import (or name) the raw bucket
+    guard — a new operator that hand-builds key → guard → join fails here."""
+    import ast
+    import pathlib
+
+    import pdfplucker_spark
+
+    kernel = {"DEFAULT_BUCKET_CAP", "guarded_self_join", "guarded_probe", "guarded_prefix_join"}
+    pkg = pathlib.Path(pdfplucker_spark.__file__).parent
+    files = sorted((pkg / "operators").glob("*.py")) + sorted((pkg / "streaming").glob("*.py"))
+    assert files
+    bad = []
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").endswith("plans.guards"):
+                bad += [f"{path.name}: imports {a.name}" for a in node.names if a.name not in kernel]
+            elif isinstance(node, ast.Import):
+                bad += [f"{path.name}: imports {a.name}" for a in node.names if a.name.endswith("plans.guards")]
+            elif isinstance(node, (ast.Name, ast.Attribute)):
+                ident = node.id if isinstance(node, ast.Name) else node.attr
+                if ident.endswith("drop_oversized_buckets"):
+                    bad.append(f"{path.name}:{node.lineno}: names {ident}")
+    assert not bad, bad

@@ -444,7 +444,7 @@ def test_stream_decontaminate_covers_full_train_corpus(spark):
         DECONTAM_MIN_SHARED,
         SAMPLE_MOD,
     )
-    from pdfplucker_spark.plans.guards import drop_oversized_buckets
+    from pdfplucker_spark.plans.guards import guarded_probe
     from pdfplucker_spark.streaming.stream import (
         q_stream_decontaminate_incremental,
     )
@@ -463,7 +463,7 @@ def test_stream_decontaminate_covers_full_train_corpus(spark):
     ).select(
         "doc_id", "is_eval", F.explode(F.expr(_SHINGLE_OVER_TOKENS)).alias("g")
     ).persist()
-    ev = drop_oversized_buckets(
+    screen = guarded_probe(
         sh.where("is_eval").select(F.col("doc_id").alias("eval_doc_id"), "g"),
         ("g",),
         DECONTAM_DF_CAP,
@@ -472,9 +472,11 @@ def test_stream_decontaminate_covers_full_train_corpus(spark):
     exp = sorted(
         map(
             tuple,
-            sh.where(~F.col("is_eval"))
-            .select(F.col("doc_id").alias("train_doc_id"), "g")
-            .join(ev, "g")
+            screen(
+                sh.where(~F.col("is_eval")).select(
+                    F.col("doc_id").alias("train_doc_id"), "g"
+                )
+            )
             .groupBy("train_doc_id", "eval_doc_id")
             .agg(F.count("*").alias("n"))
             .where(F.col("n") >= DECONTAM_MIN_SHARED)
