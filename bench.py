@@ -15,7 +15,7 @@ which one shared box cannot. The 32-CPU point is reported alongside.
 Details + methodology in BENCH/BASELINE.md.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS  (default 32).
+     SPARK_GRAFT_CPUS  (default: the CPUs this process may run on).
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pdfplucker_spark.gen import write_tier  # noqa: E402
-from pdfplucker_spark.session import get_spark  # noqa: E402
+from pdfplucker_spark.session import default_cpus, get_spark  # noqa: E402
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 BENCH_OUT = os.path.join(REPO, ".bench_out")
@@ -43,7 +43,7 @@ def _timed(fn):
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
 
     bench_path = write_tier("bench", os.path.join(REPO, ".data"))
     shutil.rmtree(BENCH_OUT, ignore_errors=True)

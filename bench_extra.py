@@ -12,7 +12,7 @@ Usage:
   python bench_extra.py e2e   [passes]              # headline extract leg
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS  (default 32).
+     SPARK_GRAFT_CPUS  (default: the CPUs this process may run on).
 """
 
 from __future__ import annotations
@@ -25,14 +25,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pdfplucker_spark.registry import all_queries  # noqa: E402
-from pdfplucker_spark.session import get_spark  # noqa: E402
+from pdfplucker_spark.session import default_cpus, get_spark  # noqa: E402
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 PLAN_DIR = os.path.join(REPO, "plans", "r10")
 
 
 def _session():
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     return get_spark(
         app="bench_extra",
         master=f"local[{cpus}]",
@@ -88,7 +88,7 @@ def cmd_e2e(passes: int = 4) -> None:
     from pdfplucker_spark.operators.extract import extract_spans
     from pdfplucker_spark.plans.partitioning import balance_docs
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     bench_path = write_tier("bench", os.path.join(REPO, ".data"))
     spark = _session()
     docs = spark.read.parquet(bench_path)

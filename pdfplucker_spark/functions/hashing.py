@@ -53,17 +53,25 @@ def affine_coeffs(k: int, seed: str = "mh") -> list[tuple[int, int]]:
     return out
 
 
-def spark_minhash_band(arr_expr: str, i: int, k: int, seed: str = "mh") -> str:
-    """Spark SQL expr: the i-th of k minhash values over a string array.
-    (A fold computing all k minima at once was measured SLOWER: higher-order
-    functions are interpreted with no cross-projection CSE, so the per-token
-    zip_with allocation costs more than k straight md5 passes. Self-join
-    consumers persist the signature table instead of re-deriving it.)"""
+def spark_minhash_token_hashes(arr_expr: str) -> str:
+    """Spark SQL expr: ``md5_long(t) % P`` for every element of a string
+    array — the ONE md5 per element that all k affine sketches share. Put
+    it in its own projection and reference it from the k band expressions
+    (k textual references keep CollapseProject from inlining it)."""
+    return f"transform({arr_expr}, t -> {sql_expr_md5_long('t')} % {MINHASH_P}L)"
+
+
+def spark_minhash_band(hashed_expr: str, i: int, k: int, seed: str = "mh") -> str:
+    """Spark SQL expr: the i-th of k minhash values over the token-hash
+    array of ``spark_minhash_token_hashes`` — one affine pass per band, no
+    md5. (A fold computing all k minima at once was measured SLOWER:
+    higher-order functions are interpreted, and the per-token zip_with
+    allocation costs more than k straight passes. Self-join consumers
+    persist the signature table instead of re-deriving it.)"""
     a, b = affine_coeffs(k, seed)[i]
-    h = sql_expr_md5_long("t")
     return (
-        f"array_min(transform({arr_expr}, "
-        f"t -> ({a}L * ({h} % {MINHASH_P}L) + {b}L) % {MINHASH_P}L))"
+        f"array_min(transform({hashed_expr}, "
+        f"h -> ({a}L * h + {b}L) % {MINHASH_P}L))"
     )
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pdfplucker_spark.functions.hashing import (
     duckdb_minhash_band,
     spark_minhash_band,
+    spark_minhash_token_hashes,
     sql_expr_md5_long,
     sql_md5_long,
 )
@@ -128,19 +129,26 @@ SQL_DEDUP_BAG_NULLS = _sql_bag(
 _TOKS_EXPR = "array_distinct(split(text, ' '))"
 
 
-def _sig_cols():
-    """k=8 minhash over the token set — one affine sketch per band over the
-    shared md5 family (functions/hashing.py); map-only, codegen-friendly."""
-    return [
-        F.expr(spark_minhash_band(_TOKS_EXPR, i, N_HASHES)).alias(f"sig{i}")
-        for i in range(N_HASHES)
-    ]
+def _sigs(d: DataFrame) -> DataFrame:
+    """(doc_id, sig0..sig7): k=8 minhash over the token set — one affine
+    sketch per band over the shared md5 family (functions/hashing.py);
+    map-only. Every token is split and md5'd ONCE, in its own projection:
+    the 8 band expressions each name ``_th``, so CollapseProject keeps the
+    hoist (inlined, the split and md5 would re-run per band)."""
+    return d.select(
+        "doc_id", F.expr(spark_minhash_token_hashes(_TOKS_EXPR)).alias("_th")
+    ).select(
+        "doc_id",
+        *(
+            F.expr(spark_minhash_band("_th", i, N_HASHES)).alias(f"sig{i}")
+            for i in range(N_HASHES)
+        ),
+    )
 
 
 def q_dedup_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc MinHash signature (k=8) — map-only, no shuffle."""
-    d = load(spark, sf_dir, "documents")
-    return d.select("doc_id", *_sig_cols())
+    return _sigs(load(spark, sf_dir, "documents"))
 
 
 _SQL_TOKS = "list_distinct(string_split(text, ' '))"
@@ -196,21 +204,24 @@ def _verify_jaccard(
     cand: DataFrame, toks: DataFrame, left: str, right: str, threshold: float
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs — THE verify join,
-    shared by every pair operator. Includes the lossless size filter
-    (set-similarity join standard): |I| <= min(|A|,|B|) and |U| >=
-    max(|A|,|B|), so jaccard <= min/max — pairs failing the O(1)
-    length-ratio bound skip the O(|A|+|B|) intersect/union entirely (37%
-    of candidates on the sf0.1 corpus; far more at production thresholds).
-    ``toks`` must have columns (doc_id, toks) and should be persisted by
-    the caller (it feeds both aliases)."""
+    shared by every pair operator. The lossless size filter (set-similarity
+    join standard) comes first: |I| <= min(|A|,|B|) and |U| >= max(|A|,|B|),
+    so jaccard <= min/max — pairs failing the O(1) length-ratio bound never
+    reach the intersect (37% of candidates on the sf0.1 corpus; far more at
+    production thresholds). Each surviving pair then pays exactly ONE
+    ``array_intersect``: both sides are distinct arrays, so
+    |U| = |A| + |B| − |I| and no union is built. ``toks`` must have columns
+    (doc_id, toks) and should be persisted by the caller (it feeds both
+    aliases)."""
     ratio = F.least(F.size("ta.toks"), F.size("tb.toks")).cast(
         "double"
     ) / F.greatest(F.size("ta.toks"), F.size("tb.toks"))
-    # ONE array pass per surviving pair: both sides are distinct arrays, so
-    # |U| = |A| + |B| - |I| exactly — the same two integers divide, so the
-    # double (and its round) is bit-identical to the intersect/union form,
-    # at half the per-pair hash-set work (array_union cost ~ array_intersect)
-    isz = F.size(F.array_intersect("ta.toks", "tb.toks"))
+    # the intersect size is a Generate output, which no filter crosses:
+    # ``jac >= t`` stays above it. Pushed into the join condition, the
+    # intersect would run there, ahead of the ratio test, and again in the
+    # projection
+    isz = F.explode(F.array(F.size(F.array_intersect("ta.toks", "tb.toks"))))
+    jac = F.col("isz").cast("double") / (F.col("n") - F.col("isz"))
     return (
         cand.join(toks.alias("ta"), F.col(left) == F.col("ta.doc_id"))
         .join(toks.alias("tb"), F.col(right) == F.col("tb.doc_id"))
@@ -218,13 +229,11 @@ def _verify_jaccard(
         .select(
             left,
             right,
-            (
-                isz.cast("double")
-                / (F.size("ta.toks") + F.size("tb.toks") - isz)
-            ).alias("jac"),
+            (F.size("ta.toks") + F.size("tb.toks")).alias("n"),
+            isz.alias("isz"),
         )
-        .where(F.col("jac") >= threshold)
-        .select(left, right, F.round("jac", 6).alias("jaccard"))
+        .where(jac >= threshold)
+        .select(left, right, F.round(jac, 6).alias("jaccard"))
     )
 
 
@@ -232,7 +241,7 @@ def _minhash_pairs(d: DataFrame, bucket_cap: int | None) -> DataFrame:
     # persist: the signature table feeds BOTH sides of the banded self-join;
     # without it the minhash scan of the corpus runs twice. Per-doc sigs are
     # 8 longs — ~80 GB at 1e9 docs, spillable (MEMORY_AND_DISK default).
-    sigs = d.select("doc_id", *_sig_cols()).persist()
+    sigs = _sigs(d).persist()
     cand = (
         guarded_self_join(
             _band_rows(sigs), ("band", "key"), "doc_id", bucket_cap, "dedup_minhash_pairs"
@@ -318,7 +327,7 @@ def q_dedup_incremental(
     from pdfplucker_spark.functions.hashing import md5_long
 
     d = load(spark, sf_dir, "documents")
-    sigs = d.select("doc_id", *_sig_cols()).persist()
+    sigs = _sigs(d).persist()
     # persisted: both slices read it, and the cap counts occupancy over
     # all of it — batch and index bands alike
     bands = _band_rows(sigs).persist()

@@ -1876,39 +1876,89 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+def _is_star_forest(edges: DataFrame) -> bool:
+    """The star-contraction fixpoint, tested exactly on a canonical edge
+    set: every ``src`` has exactly one out-edge and no ``dst`` is also a
+    ``src`` — each edge points a leaf straight at its star's root, which
+    is its component minimum. One aggregate action: per node, its out- and
+    in-degree; then the max out-degree and the count of nodes with both."""
+    deg = (
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("src").alias("node"), F.lit(1).alias("o")),
+                    F.struct(F.col("dst").alias("node"), F.lit(0).alias("o")),
+                )
+            ).alias("e")
+        )
+        .groupBy("e.node")
+        .agg(F.sum("e.o").alias("o"), F.count("*").alias("d"))
+    )
+    row = deg.agg(
+        F.max("o").alias("max_out"),
+        F.count(F.when((F.col("o") > 0) & (F.col("d") > F.col("o")), 1)).alias("mid"),
+    ).collect()[0]
+    # empty edge set (max is NULL): every node is its own star
+    return (row["max_out"] or 0) <= 1 and row["mid"] == 0
+
+
 def connected_components(
     nodes: DataFrame, pairs: DataFrame, max_iters: int = 25
 ) -> DataFrame:
     """Connected components via ALTERNATING large-star / small-star rounds
     (Kiveris et al. 2014) — the O(log n)-round star-contraction algorithm.
-    Each round is two join+aggregate passes over the edge set; at the
-    fixpoint the edges form a star forest (every node points straight at
-    its component minimum), so labels read off with one final aggregate.
-    This replaces the round-7 min-label propagation loop, which needed
-    O(diameter) rounds: a chain-heavy web-graph dup component paid one
-    distributed join PER HOP, while star contraction halves distances
-    every round (the 24-chain test converges in ≤6 rounds).
+    Each round is two join+aggregate passes over the edge set; the loop
+    stops at the algorithm's fixpoint, a star forest (every node points
+    straight at its component minimum — ``_is_star_forest``), so labels
+    read off with one final aggregate. This replaces the round-7 min-label
+    propagation loop, which needed O(diameter) rounds: a chain-heavy
+    web-graph dup component paid one distributed join PER HOP, while star
+    contraction halves distances every round (the 24-chain test converges
+    in ≤5 rounds; an input that already is a star forest in 0).
 
     Loop hygiene at cluster scale: every round LAZY-``localCheckpoint``s
     the new edge set — lineage truncates immediately (the star plans
     reference their input many times, so an untruncated loop plan grows
     exponentially in rounds) while materialization happens inside the
-    digest job, so each round costs ONE job where the r9 eager form paid
-    a checkpoint job plus a digest job; the fixpoint check is a
-    count+hash digest of the canonical edge set — a 2-row aggregate, the
-    only driver traffic. The digest hash (xxhash64) is
-    internal control flow only, never oracle-compared: both engines see
-    only the converged labels. ``max_iters`` is a safety net that LOGS
-    when hit (star contraction may then not have merged distant nodes —
-    silence would misread as convergence). ``connected_components
-    .last_rounds`` records the executed round count (test/diagnostic
-    hook).
+    star-forest test's job, so each round costs ONE action where the r9
+    eager form paid a checkpoint job plus a test job. The test is exact
+    (no hash), and its 1-row result is the only driver traffic.
+    ``max_iters`` is a safety net that LOGS when hit (star contraction may
+    then not have merged distant nodes — silence would misread as
+    convergence). ``connected_components.last_rounds`` records the
+    executed round count (test/diagnostic hook).
 
     Args: ``nodes`` — one column ``node``; ``pairs`` — columns
     ``(src, dst)``, one direction per undirected edge. Returns
     ``(node, label)``."""
     import logging
 
+    edges, rounds, converged = _star_contract(pairs, max_iters)
+    connected_components.last_rounds = rounds
+    if not converged:
+        logging.getLogger(__name__).warning(
+            "connected_components: hit the %d-round safety cap before "
+            "convergence — distant nodes of a component may not have "
+            "merged yet",
+            max_iters,
+        )
+    # star forest: every non-minimum node has its component min as its one
+    # out-edge (min() tolerates a not-yet-converged cap-hit state, where a
+    # node may still carry several out-edges); component minima and
+    # isolated nodes have none → label = self
+    lab = edges.groupBy("src").agg(F.min("dst").alias("lab"))
+    return nodes.join(lab, nodes["node"] == lab["src"], "left").select(
+        "node", F.coalesce("lab", F.col("node")).alias("label")
+    )
+
+
+def _star_contract(
+    pairs: DataFrame, max_iters: int
+) -> tuple[DataFrame, int, bool]:
+    """The contraction loop of ``connected_components``: canonical edges of
+    ``pairs`` → alternating large/small-star rounds until the edge set is a
+    star forest or ``max_iters`` rounds ran. Returns (edges, rounds,
+    converged)."""
     # canonical undirected edge set: (larger, smaller), no self-loops —
     # exactly the form small-star consumes and both stars emit
     edges = (
@@ -1920,60 +1970,14 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=False)
     )
-
-    def _digest(e: DataFrame):
-        # deterministic edge-set fingerprint: count + order-independent
-        # hash sum (internal convergence control only — see docstring).
-        # Running it against the just-persisted frame makes ONE job both
-        # materialize the round's edge set into cache and compute the
-        # fixpoint check — the r9 shape paid a localCheckpoint job PLUS a
-        # digest job per round, doubling the loop's fixed job latency.
-        row = e.agg(
-            F.count("*").alias("n"),
-            # decimal sum: order-independent AND overflow-free under ANSI
-            # (a bigint sum of 64-bit hashes overflows almost immediately)
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    digest = _digest(edges)
-    converged = digest[0] == 0  # empty graph: every node is its own star
+    # the test's action fills the lazy checkpoint: one job per round
+    converged = _is_star_forest(edges)
     rounds = 0
-    for i in range(max_iters):
-        if converged:
-            break
-        # LAZY localCheckpoint: truncates the logical lineage NOW (the
-        # star plans reference their input many times, so an untruncated
-        # loop plan grows exponentially in rounds) but materializes only
-        # when the digest action runs — one job per round where the r9
-        # eager form paid a checkpoint job PLUS a digest job
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(
-            eager=False
-        )
-        nd = _digest(new_edges)  # one job: checkpoint fill + fixpoint check
-        edges = new_edges
-        rounds = i + 1
-        if nd == digest:
-            # both stars were the identity ⇒ star-forest fixpoint
-            converged = True
-            break
-        digest = nd
-    connected_components.last_rounds = rounds
-    if not converged:
-        logging.getLogger(__name__).warning(
-            "connected_components: hit the %d-round safety cap before "
-            "convergence — distant nodes of a component may not have "
-            "merged yet",
-            max_iters,
-        )
-    # star forest: every non-minimum node has its component min among its
-    # out-edges (min() tolerates a not-yet-converged cap-hit state, where
-    # a node may still carry several out-edges); component minima and
-    # isolated nodes have none → label = self
-    lab = edges.groupBy("src").agg(F.min("dst").alias("lab"))
-    return nodes.join(lab, nodes["node"] == lab["src"], "left").select(
-        "node", F.coalesce("lab", F.col("node")).alias("label")
-    )
+    while not converged and rounds < max_iters:
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
+        rounds += 1
+        converged = _is_star_forest(edges)
+    return edges, rounds, converged
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -193,15 +193,22 @@ def _exact_cosine_pairs(emb, cand, threshold):
             F.expr("aggregate(cast(embedding as array<double>), 0D, (a,x) -> a + x*x)")
         ).alias("nrm"),
     )
-    dot = "aggregate(zip_with(ea.v, eb.v, (x,y) -> x*y), 0D, (s,t) -> s+t)"
+    # the dot is a Generate output, which no filter crosses: ``cos >= t``
+    # stays above it, so the interpreted fold runs once per candidate.
+    # Pushed into the join condition, it would run there and again in the
+    # projection
+    dot = "explode(array(aggregate(zip_with(ea.v, eb.v, (x,y) -> x*y), 0D, (s,t) -> s+t)))"
+    cos = F.col("dot") / F.col("nn")
     return (
         cand.join(e.alias("ea"), F.col("vec_a") == F.col("ea.vec_id"))
         .join(e.alias("eb"), F.col("vec_b") == F.col("eb.vec_id"))
         .select(
             "vec_a",
             "vec_b",
-            (F.expr(dot) / (F.col("ea.nrm") * F.col("eb.nrm"))).alias("cos"),
+            (F.col("ea.nrm") * F.col("eb.nrm")).alias("nn"),
+            F.expr(dot).alias("dot"),
         )
+        .select("vec_a", "vec_b", cos.alias("cos"))
         .where(F.col("cos") >= threshold)
     )
 

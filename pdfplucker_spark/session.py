@@ -13,7 +13,24 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run on
+    (its affinity set — a container's quota, not the machine's cores)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_mem() -> str:
+    """``SPARK_DRIVER_MEM`` when set, else half the host's MemTotal (whole
+    GiB, at least 1g, at most 16g): in local mode the driver JVM is the
+    whole engine, and the other half is left to Python workers, page cache
+    and the OS."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    with open("/proc/meminfo") as f:
+        kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(1, min(16, kib // 2**20 // 2))}g"
 
 
 def get_spark(
@@ -23,7 +40,7 @@ def get_spark(
     arrow_batch_rows: int = 1024,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = default_cpus()
     master = master or f"local[{cores}]"
     # Python workers are separate processes; they need the package on their
     # path (cluster equivalent: spark-submit --py-files, see job.py).
@@ -40,7 +57,7 @@ def get_spark(
         .appName(app)
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cores),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -73,7 +90,7 @@ def get_spark(
         # 128MB JVM default — nested-span batches expand a lot in flight
         .config("spark.sql.files.maxPartitionBytes", "33554432")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_mem())
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -863,7 +863,7 @@ def stream_dedup_incremental(
     from pdfplucker_spark.operators.dedup import (
         JACCARD_THRESHOLD,
         _band_rows,
-        _sig_cols,
+        _sigs,
         _verify_jaccard,
     )
     from pdfplucker_spark.plans.guards import DEFAULT_BUCKET_CAP, guarded_probe
@@ -918,10 +918,12 @@ def stream_dedup_incremental(
                 continue
             cur = batch_df.where(F.col("bno") == bno)
             # bands and toks each feed TWO consumers (candidate join +
-            # index write / verify union + index write): persist THEM, not
-            # the raw rows — the minhash fold is the expensive part and
-            # must not run twice per wave
-            bands = _band_rows(cur.select("doc_id", *_sig_cols())).persist()
+            # index write / verify union + index write): persist the sigs
+            # and toks, not the raw rows — the minhash fold is the
+            # expensive part and must run once per wave, not once per band
+            # branch of the union or per consumer
+            sigs = _sigs(cur).persist()
+            bands = _band_rows(sigs)
             toks = cur.select(
                 "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
             ).persist()
@@ -968,7 +970,7 @@ def stream_dedup_incremental(
             _mark_committed(index_dir, _index_marker(bno))
             # per-wave caches die with the wave — a 10⁹-doc drain must not
             # accumulate one cached frame pair per micro-batch
-            bands.unpersist()
+            sigs.unpersist()
             toks.unpersist()
 
     return (

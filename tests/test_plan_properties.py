@@ -610,3 +610,104 @@ def test_guarded_prefix_join_plan_shape(spark):
         )
         _assert_guarded_join_shape(_plan(cand), pair, anti=False)
     spark.catalog.clearCache()
+
+
+# ---------------------------------------------------------------------------
+# verify measures: each expensive per-pair (or per-token) expression is
+# evaluated once. Catalyst pushes a filter on a projected measure through
+# the projection, so an unguarded ``measure >= t`` lands in the join
+# condition and the projection evaluates the measure again.
+# ---------------------------------------------------------------------------
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_minhash_signature_hashes_tokens_once(spark):
+    """Every token is split and md5'd once, in its own projection, and the
+    8 affine band minima read that hash array — not 8 inlined md5 passes
+    (higher-order functions get no common-subexpression elimination)."""
+    from pdfplucker_spark.operators.dedup import q_dedup_minhash_sig
+
+    plan = _optimized(q_dedup_minhash_sig(spark, SF))
+    assert plan.count("md5(") == 1, plan[:3000]
+    assert plan.count("split(") == 1, plan[:3000]
+
+
+def _verify_lines(plan: str, measure: str) -> tuple[list, list]:
+    """(nodes whose line holds ``measure``, Join nodes holding it)."""
+    nodes = _nodes(plan)
+    hits = [(i, n) for i, n in enumerate(nodes) if measure in n[2]]
+    joins = [n for _, n in hits if n[1] == "Join"]
+    return hits, joins
+
+
+def test_jaccard_verify_intersects_once_above_the_size_filter(spark):
+    """``_verify_jaccard``: exactly one ``array_intersect`` per plan, never
+    in a Join condition, and only above the O(1) size-ratio filter — pairs
+    the ratio bound rejects never reach the intersect."""
+    from pdfplucker_spark.operators.dedup import (
+        q_dedup_minhash_pairs,
+        q_dedup_ngram_pairs,
+    )
+
+    for q in (q_dedup_minhash_pairs, q_dedup_ngram_pairs):
+        spark.catalog.clearCache()
+        plan = _optimized(q(spark, SF))
+        assert plan.count("array_intersect(") == 1, (q.__name__, plan[:4000])
+        hits, joins = _verify_lines(plan, "array_intersect(")
+        assert not joins, (q.__name__, joins)
+        i, (ind, _, _) = hits[0]
+        ratio = [(j, n) for j, n in enumerate(_nodes(plan))
+                 if "least(size(toks" in n[2] and "greatest(size(toks" in n[2]]
+        assert ratio, (q.__name__, plan[:4000])
+        assert all(j > i and n[0] > ind for j, n in ratio), (q.__name__, plan[:4000])
+    spark.catalog.clearCache()
+
+
+def test_cosine_verify_folds_the_dot_once(spark):
+    """``_exact_cosine_pairs``: the interpreted sequential dot fold appears
+    once, outside every Join condition (inlined, ``cos >= t`` ran it in the
+    join and the projection ran it again)."""
+    from pdfplucker_spark.operators.similarity import q_sim_cosine_dup_pairs
+
+    spark.catalog.clearCache()
+    plan = _optimized(q_sim_cosine_dup_pairs(spark, SF))
+    assert plan.count("zip_with(v#") == 1, plan[:4000]
+    assert not _verify_lines(plan, "zip_with(v#")[1], plan[:4000]
+    spark.catalog.clearCache()
+
+
+def test_array_intersect_only_in_the_verify_join():
+    """``array_intersect`` is called only inside ``dedup._verify_jaccard``:
+    a pair operator that computes its own intersect measure would bring
+    back the inlined-measure shape the pins above rule out."""
+    import ast
+    import pathlib
+
+    import pdfplucker_spark
+
+    pkg = pathlib.Path(pdfplucker_spark.__file__).parent
+    files = sorted((pkg / "operators").glob("*.py")) + sorted((pkg / "streaming").glob("*.py"))
+    assert files
+    bad, found = [], 0
+    for path in files:
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef) and fn.name == "_verify_jaccard" \
+                    and path.name == "dedup.py":
+                allowed |= {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+                hit = name == "array_intersect"
+            else:
+                hit = isinstance(node, ast.Constant) and isinstance(node.value, str) \
+                    and "array_intersect(" in node.value
+            if hit and id(node) in allowed:
+                found += 1
+            elif hit:
+                bad.append(f"{path.name}:{node.lineno}")
+    assert not bad, bad
+    assert found == 1, found

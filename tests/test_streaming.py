@@ -504,7 +504,7 @@ def test_stream_dedup_index_ignores_uncommitted_wave_dir(spark, tmp_path):
     (30, 999); marker membership must not."""
     from pyspark.sql import functions as F
 
-    from pdfplucker_spark.operators.dedup import _band_rows, _sig_cols
+    from pdfplucker_spark.operators.dedup import _band_rows, _sigs
     from pdfplucker_spark.streaming.stream import (
         _committed_waves,
         stream_dedup_incremental,
@@ -535,7 +535,7 @@ def test_stream_dedup_index_ignores_uncommitted_wave_dir(spark, tmp_path):
     poison = spark.createDataFrame(
         [(999, texts[30])], "doc_id long, text string"
     )
-    _band_rows(poison.select("doc_id", *_sig_cols())).write.parquet(
+    _band_rows(_sigs(poison)).write.parquet(
         os.path.join(index_dir, "bno=1", "bands")
     )
     poison.select(
@@ -573,7 +573,7 @@ def test_stream_dedup_retry_skips_marker_committed_wave(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from pdfplucker_spark.job import _mark_committed
-    from pdfplucker_spark.operators.dedup import _band_rows, _sig_cols
+    from pdfplucker_spark.operators.dedup import _band_rows, _sigs
     from pdfplucker_spark.streaming.stream import (
         _committed_waves,
         _index_marker,
@@ -605,7 +605,7 @@ def test_stream_dedup_retry_skips_marker_committed_wave(spark, tmp_path):
     sentinel = spark.createDataFrame(
         [(777, texts[10])], "doc_id long, text string"
     )
-    _band_rows(sentinel.select("doc_id", *_sig_cols())).write.parquet(
+    _band_rows(_sigs(sentinel)).write.parquet(
         os.path.join(index_dir, "bno=0", "bands")
     )
     sentinel.select(
@@ -659,7 +659,7 @@ def test_stream_dedup_marker_without_output_raises(spark, tmp_path):
     from pyspark.sql.streaming import StreamingQueryException
 
     from pdfplucker_spark.job import _mark_committed
-    from pdfplucker_spark.operators.dedup import _band_rows, _sig_cols
+    from pdfplucker_spark.operators.dedup import _band_rows, _sigs
     from pdfplucker_spark.streaming.stream import (
         _index_marker,
         stream_dedup_incremental,
@@ -677,7 +677,7 @@ def test_stream_dedup_marker_without_output_raises(spark, tmp_path):
     index_dir = out_dir + "_index"
     # committed wave 0: index tables + marker but NO out_dir/bno=0 —
     # the simulated marker-before-result reorder
-    _band_rows(docs.select("doc_id", *_sig_cols())).write.parquet(
+    _band_rows(_sigs(docs)).write.parquet(
         os.path.join(index_dir, "bno=0", "bands")
     )
     docs.selectExpr(
