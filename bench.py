@@ -61,7 +61,7 @@ def main():
     from pdfplucker_spark.operators.similarity import q_sim_cosine_topk
     from pdfplucker_spark.operators.spans_sql import q_extract_full
     from pdfplucker_spark.operators.textstats import q_text_quality
-    from pdfplucker_spark.plans.partitioning import balance_docs
+    from pdfplucker_spark.plans.partitioning import fan_out
 
     spark = get_spark(
         app="bench",
@@ -75,23 +75,21 @@ def main():
     extract_spans(docs.sample(0.02).repartition(4 * cpus)).count()
 
     def extract_e2e():
-        routed = balance_docs(spark.read.parquet(bench_path), cpus * 2)
-        extract_spans(routed).write.mode("overwrite").parquet(
-            os.path.join(BENCH_OUT, "spans_out")
-        )
+        extract_spans(fan_out(spark.read.parquet(bench_path))).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(BENCH_OUT, "spans_out"))
 
     # skew leg: a giant-HEAVY corpus (1% docs at 100k spans) vs a uniform
     # control of equal doc count and ~equal total span mass — the measured
-    # number behind giant-tier routing + chunked assembly (a plan that
-    # serialized on giants would blow the ratio far past 2x)
+    # number behind byte-balanced scan splits + chunked assembly (a plan
+    # that serialized on giants would blow the ratio far past 2x)
     skew_path = write_tier("skew", os.path.join(REPO, ".data"))
     uni_path = write_tier("uniform", os.path.join(REPO, ".data"))
 
     def _leg(path, sink):
-        routed = balance_docs(spark.read.parquet(path), cpus * 2)
-        extract_spans(routed).write.mode("overwrite").parquet(
-            os.path.join(BENCH_OUT, sink)
-        )
+        extract_spans(fan_out(spark.read.parquet(path))).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(BENCH_OUT, sink))
 
     from pdfplucker_spark.operators.pipeline import (
         q_docs_bigram_logppl,
@@ -285,8 +283,8 @@ def main():
                 queries["extract_e2e_uniform5k"] / queries["extract_e2e_skew5k"], 3
             ),
             "note": "1% giant (100k-span) docs vs uniform control of equal doc "
-            "count and ~equal span mass; giant-tier routing keeps the ratio "
-            "within 2x (>= 0.5)",
+            "count and ~equal span mass; byte-balanced scan splits keep the "
+            "ratio within 2x (>= 0.5)",
         },
         "scaling": {
             **{f"cpus{lvl}_sec": t for lvl, t in sorted(scale.items())},
@@ -308,7 +306,7 @@ def _scale_worker(n: int, bench_path: str) -> None:
     """
     os.sched_setaffinity(0, set(range(n)))  # children (JVM, workers) inherit
     from pdfplucker_spark.operators.extract import extract_spans
-    from pdfplucker_spark.plans.partitioning import balance_docs
+    from pdfplucker_spark.plans.partitioning import fan_out
 
     s = get_spark(
         app=f"scale{n}", master=f"local[{n}]", shuffle_partitions=n, arrow_batch_rows=4096,  # kernel re-splits by span count (extract.py)
@@ -319,7 +317,7 @@ def _scale_worker(n: int, bench_path: str) -> None:
     extract_spans(df.sample(0.01).repartition(4 * n)).count()  # warm all workers
 
     def run_job():
-        extract_spans(balance_docs(s.read.parquet(*paths), n * 2)).write.mode(
+        extract_spans(fan_out(s.read.parquet(*paths))).write.mode(
             "overwrite"
         ).parquet(os.path.join(BENCH_OUT, f"scale_{n}"))
 

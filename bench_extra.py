@@ -86,7 +86,7 @@ def cmd_e2e(passes: int = 4) -> None:
     """The headline leg's computation, noop-sinked (no parquet write)."""
     from pdfplucker_spark.gen import write_tier
     from pdfplucker_spark.operators.extract import extract_spans
-    from pdfplucker_spark.plans.partitioning import balance_docs
+    from pdfplucker_spark.plans.partitioning import fan_out
 
     cpus = default_cpus()
     bench_path = write_tier("bench", os.path.join(REPO, ".data"))
@@ -97,7 +97,7 @@ def cmd_e2e(passes: int = 4) -> None:
     ts = []
     for _ in range(passes):
         t0 = time.perf_counter()
-        _noop(extract_spans(balance_docs(spark.read.parquet(bench_path), cpus * 2)))
+        _noop(extract_spans(fan_out(spark.read.parquet(bench_path))))
         ts.append(round(time.perf_counter() - t0, 3))
     print(json.dumps({"extract_e2e_noop": {"min": min(ts), "passes": ts}}))
     spark.stop()

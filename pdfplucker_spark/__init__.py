@@ -19,7 +19,7 @@ Layout:
     operators/spans_sql.py SQL-expressible span operators (oracle-checkable)
     sources/tables.py      testdata loaders + derived interleaved-spans view
     functions/hashing.py   portable (cross-engine) md5-based hash expressions
-    plans/partitioning.py  skew-aware repartitioning (size-tiered routing)
+    plans/partitioning.py  the scan-parallelism (fan-out) rule
     metrics.py             run metrics + per-partition lineage aggregations
     job.py                 spark-submit entrypoint with checkpoint/resume
 """

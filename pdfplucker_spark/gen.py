@@ -172,8 +172,8 @@ TIERS = {
     "t2": (2000, 5, 500),
     "bench": (50_000, 5, 2000),
     # giant-HEAVY leg: 1% of docs are 100k-span giants (every 100th doc, so
-    # each shard carries some), rest Zipf like bench — the corpus where
-    # giant-tier routing (plans/partitioning.py) earns its keep
+    # each shard carries some), rest Zipf like bench — the corpus that
+    # shows byte-balanced scan splits bound per-task span mass
     "skew": (5_000, 5, 2000),
     # the control: SAME doc count and ~same total span mass as "skew"
     # (50×100k giant + ~4950×140 Zipf ≈ 5.69M spans → 1138/doc), uniform —

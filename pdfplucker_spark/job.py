@@ -3,9 +3,9 @@
 Replaces the reference's CLI + pool + per-doc subprocess orchestration
 (cli.py:11-167, processor.py:183-231,342-455) with one declarative plan:
 
-    scan → resume filter (anti-join committed doc_ids) → size-tiered
-    repartition → mapInArrow extract → write spans_out + fails + lineage +
-    metrics
+    scan → fan-out rule (round-robin only when the scan is under-parallel)
+    → resume filter (anti-join committed doc_ids) → mapInArrow extract →
+    write spans_out + fails + lineage + metrics
 
 Iceberg-first design, Parquet fallback (SURVEY.md §7.4): with
 ``--format iceberg`` tables are written through ``writeTo(...).append()``
@@ -15,7 +15,7 @@ resume anti-joins against the committed ``spans_out`` doc_ids.
 
 Cluster run:
     spark-submit --py-files pdfplucker_spark.zip -m pdfplucker_spark.job \
-        --input <table-or-path> --output <dir> --partitions 2048 --resume
+        --input <table-or-path> --output <dir> --resume
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ from pdfplucker_spark.metrics import (
     with_lineage_cols,
 )
 from pdfplucker_spark.operators.extract import extract_bundle, extract_spans
-from pdfplucker_spark.plans.partitioning import DEFAULT_SKEW_THRESHOLD, balance_docs
+from pdfplucker_spark.plans.partitioning import fan_out
 from pdfplucker_spark.session import get_spark
 
 
@@ -412,17 +412,16 @@ def _committed_doc_ids(spark, output: str, fmt: str) -> DataFrame | None:
     docs are safely reprocessed; readers use ``committed_view`` to ignore
     the torn run's partial spans."""
     if fmt == "iceberg":
-        try:
-            return spark.read.table(f"{output}.docs_out").select("doc_id")
-        except Exception:
+        # only a MISSING table means "nothing committed"; a read failure
+        # must propagate — swallowing it would re-extract and re-commit
+        # every doc (duplicate docs_out rows)
+        if not spark.catalog.tableExists(f"{output}.docs_out"):
             return None
+        return spark.read.table(f"{output}.docs_out").select("doc_id")
     runs = committed_run_ids(output)
     if not runs:
         return None
-    try:
-        docs = spark.read.parquet(os.path.join(output, "docs_out"))
-    except Exception:
-        return None
+    docs = spark.read.parquet(os.path.join(output, "docs_out"))
     return docs.where(F.col("run_id").isin(runs)).select("doc_id")
 
 
@@ -460,8 +459,6 @@ def run(
     input_path: str,
     output: str,
     run_id: str | None = None,
-    partitions: int | None = None,
-    skew_threshold: int = DEFAULT_SKEW_THRESHOLD,
     resume: bool = False,
     fmt: str = "parquet",
     limit: int | None = None,
@@ -473,13 +470,12 @@ def run(
     (the analogue of process_batch's returned metrics, processor.py:454)."""
     t0 = time.time()
     run_id = _validate_run_id(run_id) if run_id else uuid.uuid4().hex[:12]
-    n_parts = partitions or spark.sparkContext.defaultParallelism
 
     lock = _acquire_lock(output, run_id) if fmt != "iceberg" else None
     try:
         return _run_locked(
-            spark, input_path, output, run_id, n_parts, skew_threshold,
-            resume, fmt, limit, details, layout, span_budget, t0,
+            spark, input_path, output, run_id, resume, fmt, limit, details,
+            layout, span_budget, t0,
         )
     finally:
         if lock is not None:
@@ -487,12 +483,15 @@ def run(
 
 
 def _run_locked(
-    spark, input_path, output, run_id, n_parts, skew_threshold,
-    resume, fmt, limit, details, layout, span_budget, t0,
+    spark, input_path, output, run_id, resume, fmt, limit, details,
+    layout, span_budget, t0,
 ) -> dict:
     docs = read_docs(spark, input_path, fmt)
-    if limit:  # S2: dev/smoke truncation (processor.py:374)
-        docs = docs.limit(limit)
+    # S2: dev/smoke truncation (processor.py:374). The fan-out rule reads
+    # the BARE scan's partition count (a plan with an exchange would run
+    # under AQE to answer), and never goes below the limit (it would
+    # shuffle the whole input for a smoke run).
+    docs = docs.limit(limit) if limit else fan_out(docs)
 
     if resume:
         committed = _committed_doc_ids(spark, output, fmt)
@@ -504,9 +503,10 @@ def _run_locked(
 
     # extraction consumes exactly (doc_id, spans); sidecar input columns
     # (e.g. metadata) rejoin at the compact doc level below
-    routed = balance_docs(docs.select("doc_id", "spans"), n_parts, skew_threshold)
     extract = extract_bundle if details else extract_spans
-    extracted = with_lineage_cols(extract(routed, span_budget=span_budget), run_id)
+    extracted = with_lineage_cols(
+        extract(docs.select("doc_id", "spans"), span_budget=span_budget), run_id
+    )
 
     # S12 live-progress analogue (processor.py:424-426): observed metrics
     # ride the write action itself — no extra pass over the data.
@@ -659,8 +659,6 @@ def main(argv=None):
     p.add_argument("--input", required=True, help="input table/path (doc_id, spans)")
     p.add_argument("--output", required=True, help="output dir (parquet) or namespace (iceberg)")
     p.add_argument("--run-id", default=None)
-    p.add_argument("--partitions", type=int, default=None)
-    p.add_argument("--skew-threshold", type=int, default=DEFAULT_SKEW_THRESHOLD)
     p.add_argument("--resume", action="store_true")
     p.add_argument("--format", choices=["parquet", "iceberg"], default="parquet")
     p.add_argument("--limit", type=int, default=None)
@@ -687,8 +685,6 @@ def main(argv=None):
             a.input,
             a.output,
             run_id=a.run_id,
-            partitions=a.partitions,
-            skew_threshold=a.skew_threshold,
             resume=a.resume,
             fmt=a.format,
             limit=a.limit,

@@ -550,7 +550,7 @@ def extract_spans(df, span_budget: int | None = None):
     """docs(doc_id, spans) → extracted(doc_id, status, error, spans, n_*).
 
     One Arrow map stage; no shuffle. Callers choose partitioning
-    (see plans.partitioning.balance_docs). ``span_budget`` is the S8
+    (see plans.partitioning.fan_out). ``span_budget`` is the S8
     straggler guard: docs above it fail fast instead of stalling a task.
     """
     return df.select("doc_id", "spans").mapInArrow(

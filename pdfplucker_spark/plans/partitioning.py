@@ -1,66 +1,39 @@
-"""Skew-aware doc partitioning (SURVEY.md §4 "large-doc detection" row).
+"""The one scan-parallelism rule: fan out a scan that cannot fill the cluster.
 
-The reference warns on >100-page PDFs (processor.py:271-273) and relies on a
-per-doc kill timer; at 10^12-doc scale the equivalent problem is a handful
-of giant documents landing in the same task as thousands of small ones.
+A parquet file splits only at row-group granularity, so a one-row-group
+input is one task no matter how many slots exist, and every per-row map
+before the first exchange (the extract kernel, hash folds, tokenizers) runs
+on one core. The guide's input-skew fix (§2.5: "one huge unsplittable file
+... repartition immediately after the read") applies: when the scan yields
+at most a quarter of the cluster's slots, pay one round-robin exchange to
+unlock map parallelism. The 4x margin keeps this a no-op on any
+honestly-laid-out input — at scale a table has thousands of splits.
+Round-robin repartition is deterministic under Spark's sort-before-
+repartition default.
 
-Design decision (re-measured r10, history in BENCH/BASELINE.md): the
-parquet/Iceberg scan already yields byte-balanced partitions
-(``spark.sql.files.maxPartitionBytes``), and bytes ≈ spans for this schema —
-so per-task span mass is bounded by the split size NO MATTER how giants
-cluster in the input. The r1-r9 "giant tier" (filter the >threshold docs
-out and hash-repartition them separately) therefore bought nothing the
-byte-balanced scan does not already guarantee, and it cost a SECOND full
-scan of the input (the union's two branches cannot share one FileScan):
-2x the read I/O at any scale, and measured locally (r10, 50k-doc corpus,
-local[32]) +22% on the end-to-end extract wall. The honest failure mode
-that remains — ONE doc bigger than a scan split — is single-task work under
-any routing (a parquet row cannot split); ``span_budget`` is that defense.
-
-Defaults are therefore: NO route, NO shuffle — scan partitioning is the
-balance. Remaining knobs for pathological layouts:
-
-  - ``full_shuffle=True``: one hash repartition on doc_id (single scan,
-    one exchange) — for inputs whose file layout genuinely denies scan
-    parallelism (one huge gzip-style file, heavily size-sorted files).
-  - ``route_giants=True``: the old two-branch tiering (giants isolated
-    into their own hash partitions, smalls untouched) — strict isolation
-    when the kernel cost is super-linear in doc size; costs the second
-    scan that made it a net loss for this linear-cost kernel.
-
-``doc_id`` is unique, so hash partitioning spreads evenly; key salting is
-unnecessary (it only helps duplicate keys).
+Doc-size skew needs no rule of its own (re-measured r10, history in
+BENCH/BASELINE.md): the scan's splits are byte-balanced
+(``spark.sql.files.maxPartitionBytes``) and bytes ≈ spans for this schema,
+so per-task span mass is bounded however giants cluster. One doc bigger
+than a split is single-task work under any routing (a parquet row cannot
+split); ``span_budget`` is that defense.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
-
-# spans-per-doc above which a doc is routed to the "giant" tier when
-# route_giants=True; mirrors the reference's 100-page heuristic at
-# ~ |spans| ≈ pages × items/page
-DEFAULT_SKEW_THRESHOLD = 20_000
+from pyspark.sql import DataFrame
 
 
-def balance_docs(
-    df: DataFrame,
-    num_partitions: int,
-    skew_threshold: int = DEFAULT_SKEW_THRESHOLD,
-    giant_partitions: int | None = None,
-    full_shuffle: bool = False,
-    route_giants: bool = False,
-) -> DataFrame:
-    """Balance per-task extraction work. Default: the byte-balanced scan IS
-    the balance (single scan, no exchange — see module docstring). Opt-in:
-    ``full_shuffle`` for layout-denied parallelism, ``route_giants`` for
-    strict giant isolation (pays a second input scan)."""
-    if full_shuffle:
-        return df.repartition(num_partitions, "doc_id")
-    if not route_giants:
-        return df
-    n_spans = F.coalesce(F.size("spans"), F.lit(0))
-    small = df.where(n_spans < skew_threshold)
-    giant = df.where(n_spans >= skew_threshold).repartition(
-        giant_partitions or num_partitions, "doc_id"
-    )
-    return small.unionByName(giant)
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` to ``defaultParallelism`` partitions when its scan
+    partitions × 4 <= ``defaultParallelism``; else return ``df`` as is.
+
+    Pass a bare scan: the count is read from the RDD of ``df``'s own
+    physical plan (no row conversion, no Python RDD), which launches no job
+    only while the plan holds no exchange (under AQE, an exchange below
+    would be executed to answer). Never apply it below a ``limit``: it
+    would shuffle the whole input for a smoke run."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df._jdf.queryExecution().toRdd().getNumPartitions() * 4 <= target:
+        return df.repartition(target)
+    return df

@@ -21,6 +21,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pdfplucker_spark.plans import partitioning
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -29,22 +31,12 @@ TABLES = (
 def load(
     spark: SparkSession, sf_dir: str, name: str, fan_out: bool = False
 ) -> DataFrame:
-    """Read a testdata table, fanning out under-parallel scans.
+    """Read a testdata table; ``fan_out`` applies the scan-parallelism rule
+    (``plans.partitioning.fan_out``).
 
-    A parquet file is splittable only at row-group granularity, and the
-    sf tables are written as ONE row group — every scan is one task, so
-    all per-row map work (tokenize/shingle/hash folds) before the first
-    exchange would run on one core of the cluster. The guide's input-skew
-    fix (§2.5: "one huge unsplittable file ... repartition immediately
-    after the read") applies: when the scan yields far fewer partitions
-    than the cluster has slots, pay one cheap round-robin exchange of the
-    (small, by construction — a well-laid-out big table splits fine)
-    table to unlock map parallelism. The 4x margin keeps this a no-op on
-    any honestly-partitioned input: at scale a table has thousands of
-    row groups and the condition never fires. Round-robin repartition is
-    deterministic under Spark's sort-before-repartition default, and no
-    operator depends on scan order (all limits are ordered, first/last
-    are windowed).
+    The sf tables are written as ONE row group, so every scan is one task
+    and the rule fires on 4 or more slots. No operator depends on scan
+    order (all limits are ordered, first/last are windowed).
 
     OPT-IN (default False): it only pays where heavy per-row map work
     sits before the first exchange (hash folds — the simhash
@@ -53,13 +45,7 @@ def load(
     exchange for nothing (measured +26-66% on asof/salted/logppl when
     this was blanket-on)."""
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT"):  # measurement kill-switch
-        fan_out = False
-    if fan_out:
-        target = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() * 4 <= target:
-            df = df.repartition(target)
-    return df
+    return partitioning.fan_out(df) if fan_out else df
 
 
 # ---------------------------------------------------------------------------

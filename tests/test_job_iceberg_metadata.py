@@ -37,13 +37,13 @@ def test_iceberg_branch_end_to_end_with_resume(spark, t1_path, catalog_ns):
     spark.read.parquet(t1_path).write.saveAsTable(f"{ns}.docs_in")
 
     m1 = job.run(
-        spark, f"{ns}.docs_in", ns, run_id="i1", partitions=4, fmt="iceberg", limit=60
+        spark, f"{ns}.docs_in", ns, run_id="i1", fmt="iceberg", limit=60
     )
     assert m1["total_docs"] == 60
 
     # second run resumes from the catalog docs_out table (anti-join)
     m2 = job.run(
-        spark, f"{ns}.docs_in", ns, run_id="i2", partitions=4, fmt="iceberg", resume=True
+        spark, f"{ns}.docs_in", ns, run_id="i2", fmt="iceberg", resume=True
     )
     assert m2["total_docs"] == 40
 
@@ -57,10 +57,33 @@ def test_iceberg_branch_end_to_end_with_resume(spark, t1_path, catalog_ns):
 
     # a further resume is a no-op and must not disturb the tables
     m3 = job.run(
-        spark, f"{ns}.docs_in", ns, run_id="i3", partitions=4, fmt="iceberg", resume=True
+        spark, f"{ns}.docs_in", ns, run_id="i3", fmt="iceberg", resume=True
     )
     assert m3["total_docs"] == 0
     assert spark.read.table(f"{ns}.spans_out").count() == 100
+
+
+def test_iceberg_resume_propagates_docs_out_read_errors(
+    spark, t1_path, catalog_ns, monkeypatch
+):
+    """Only a MISSING docs_out table means "nothing committed"; a failing
+    read of an existing one must raise instead of re-committing every doc."""
+    ns = catalog_ns
+    spark.read.parquet(t1_path).write.saveAsTable(f"{ns}.docs_in")
+    job.run(spark, f"{ns}.docs_in", ns, run_id="f1", fmt="iceberg", limit=40)
+    reader = type(spark.read)
+    real = reader.table
+
+    def flaky(self, name, *a, **kw):
+        if name.endswith(".docs_out"):
+            raise OSError("transient catalog read failure")
+        return real(self, name, *a, **kw)
+
+    monkeypatch.setattr(reader, "table", flaky)
+    with pytest.raises(OSError, match="transient"):
+        job.run(spark, f"{ns}.docs_in", ns, run_id="f2", fmt="iceberg", resume=True)
+    monkeypatch.undo()
+    assert spark.read.table(f"{ns}.docs_out").count() == 40
 
 
 def test_latest_view_iceberg_mode(spark, t1_path, catalog_ns):
@@ -70,9 +93,9 @@ def test_latest_view_iceberg_mode(spark, t1_path, catalog_ns):
     newest committed copy of each doc."""
     ns = catalog_ns
     spark.read.parquet(t1_path).write.saveAsTable(f"{ns}.docs_in")
-    job.run(spark, f"{ns}.docs_in", ns, run_id="a1", partitions=4, fmt="iceberg")
+    job.run(spark, f"{ns}.docs_in", ns, run_id="a1", fmt="iceberg")
     job.run(
-        spark, f"{ns}.docs_in", ns, run_id="a2", partitions=4, fmt="iceberg", limit=30
+        spark, f"{ns}.docs_in", ns, run_id="a2", fmt="iceberg", limit=30
     )
 
     assert spark.read.table(f"{ns}.commits").count() == 2
@@ -118,7 +141,7 @@ def test_metadata_struct_passes_through_docs_out(spark, t1_path, tmp_path):
     with_meta.write.parquet(in_dir)
 
     out = str(tmp_path / "out_meta")
-    job.run(spark, in_dir, out, run_id="m1", partitions=4)
+    job.run(spark, in_dir, out, run_id="m1")
     docs_out = spark.read.parquet(os.path.join(out, "docs_out"))
     assert docs_out.schema["metadata"].dataType == METADATA_TYPE
     rows = {r.doc_id: r.metadata for r in docs_out.collect()}
@@ -131,7 +154,7 @@ def test_metadata_struct_passes_through_docs_out(spark, t1_path, tmp_path):
 
     # no metadata column on input → null struct, same schema
     out2 = str(tmp_path / "out_nometa")
-    job.run(spark, t1_path, out2, run_id="m2", partitions=4)
+    job.run(spark, t1_path, out2, run_id="m2")
     d2 = spark.read.parquet(os.path.join(out2, "docs_out"))
     assert d2.schema["metadata"].dataType == METADATA_TYPE
     assert d2.where(F.col("metadata").isNotNull()).count() == 0
@@ -144,7 +167,7 @@ def test_docs_out_schema_evolution_across_job_versions(spark, t1_path, tmp_path)
     import shutil
 
     out = str(tmp_path / "out")
-    job.run(spark, t1_path, out, run_id="old", partitions=4, limit=30)
+    job.run(spark, t1_path, out, run_id="old", limit=30)
 
     # simulate the old-version run: rewrite its partition without metadata
     old_dir = os.path.join(out, "docs_out", "run_id=old")
@@ -154,7 +177,7 @@ def test_docs_out_schema_evolution_across_job_versions(spark, t1_path, tmp_path)
     shutil.rmtree(old_dir)
     shutil.move(tmp_dir, old_dir)
 
-    job.run(spark, t1_path, out, run_id="new", partitions=4, resume=True)
+    job.run(spark, t1_path, out, run_id="new", resume=True)
 
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(out, "docs_out")
@@ -174,11 +197,11 @@ def test_writer_lease_blocks_concurrent_run(spark, t1_path, tmp_path):
     with open(os.path.join(out, "_RUN_LOCK"), "w") as f:
         f.write("other-run\n")
     with pytest.raises(RuntimeError, match="single-writer"):
-        job.run(spark, t1_path, out, run_id="blocked", partitions=4)
+        job.run(spark, t1_path, out, run_id="blocked")
     # stale lease (older than stale_sec) is taken over
     old = os.path.join(out, "_RUN_LOCK")
     os.utime(old, (0, 0))
-    m = job.run(spark, t1_path, out, run_id="takeover", partitions=4)
+    m = job.run(spark, t1_path, out, run_id="takeover")
     assert m["total_docs"] == 100
     assert not os.path.exists(old)
 
@@ -199,7 +222,7 @@ def test_commit_fence_refuses_after_lease_theft(spark, t1_path, tmp_path, monkey
 
     monkeypatch.setattr(J, "fails_table", thief)
     with pytest.raises(RuntimeError, match="refusing to commit"):
-        J.run(spark, t1_path, out, run_id="victim", partitions=4, limit=20)
+        J.run(spark, t1_path, out, run_id="victim", limit=20)
     assert J.committed_run_ids(out) == []  # torn, invisible
     # and the usurper's live lock survived the victim's release
     with open(os.path.join(out, "_RUN_LOCK")) as f:

@@ -13,7 +13,7 @@ from pdfplucker_spark.oracle import extract_doc
 def test_flat_layout_and_details(spark, tmp_path):
     src = write_tier("t1", str(tmp_path / "data"))
     out = str(tmp_path / "out")
-    m = job.run(spark, src, out, run_id="r", partitions=4, details=True, layout="flat")
+    m = job.run(spark, src, out, run_id="r", details=True, layout="flat")
     assert m["total_docs"] == 100
 
     flat = spark.read.parquet(os.path.join(out, "spans_out"))
@@ -42,7 +42,7 @@ def test_flat_layout_and_details(spark, tmp_path):
     )
 
     # resume works off docs_out in flat layout too
-    m2 = job.run(spark, src, out, run_id="r2", partitions=4, resume=True, layout="flat")
+    m2 = job.run(spark, src, out, run_id="r2", resume=True, layout="flat")
     assert m2["total_docs"] == 0
 
 

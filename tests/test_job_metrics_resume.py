@@ -16,7 +16,7 @@ def t1_path(tmp_path_factory):
 
 def test_job_end_to_end_metrics(spark, t1_path, tmp_path):
     out = str(tmp_path / "out")
-    m = job.run(spark, t1_path, out, run_id="r1", partitions=4)
+    m = job.run(spark, t1_path, out, run_id="r1")
 
     rows = list(gen_rows("t1"))
     expected_failed = sum(
@@ -47,9 +47,9 @@ def test_job_end_to_end_metrics(spark, t1_path, tmp_path):
 def test_resume_no_duplicates_and_equality(spark, t1_path, tmp_path):
     out = str(tmp_path / "out")
     # partial run (S2 limit), then resume to completion
-    m1 = job.run(spark, t1_path, out, run_id="part", partitions=4, limit=60)
+    m1 = job.run(spark, t1_path, out, run_id="part", limit=60)
     assert m1["total_docs"] == 60
-    m2 = job.run(spark, t1_path, out, run_id="rest", partitions=4, resume=True)
+    m2 = job.run(spark, t1_path, out, run_id="rest", resume=True)
     assert m2["total_docs"] == 40
 
     res = spark.read.parquet(os.path.join(out, "spans_out"))
@@ -72,8 +72,8 @@ def test_resume_no_duplicates_and_equality(spark, t1_path, tmp_path):
 
 def test_resume_noop_when_complete(spark, t1_path, tmp_path):
     out = str(tmp_path / "out")
-    job.run(spark, t1_path, out, run_id="full", partitions=4)
-    m = job.run(spark, t1_path, out, run_id="again", partitions=4, resume=True)
+    job.run(spark, t1_path, out, run_id="full")
+    m = job.run(spark, t1_path, out, run_id="again", resume=True)
     assert m["total_docs"] == 0
     res = spark.read.parquet(os.path.join(out, "spans_out"))
     assert res.count() == 100
@@ -87,11 +87,11 @@ def test_torn_run_reprocessed_exactly_once(spark, t1_path, tmp_path):
 
     out = str(tmp_path / "out")
     # full run that "crashes" after writes but before the commit marker
-    job.run(spark, t1_path, out, run_id="torn", partitions=4, limit=40)
+    job.run(spark, t1_path, out, run_id="torn", limit=40)
     _os.remove(_os.path.join(out, "_commits", "torn"))  # simulate the crash
 
     # resume: torn run invisible → all 100 docs processed again
-    m = job.run(spark, t1_path, out, run_id="good", partitions=4, resume=True)
+    m = job.run(spark, t1_path, out, run_id="good", resume=True)
     assert m["total_docs"] == 100
 
     # raw table contains the torn duplicates…
@@ -103,5 +103,30 @@ def test_torn_run_reprocessed_exactly_once(spark, t1_path, tmp_path):
     assert view.select("doc_id").distinct().count() == 100
 
     # and a further resume is a no-op
-    m2 = job.run(spark, t1_path, out, run_id="again", partitions=4, resume=True)
+    m2 = job.run(spark, t1_path, out, run_id="again", resume=True)
     assert m2["total_docs"] == 0
+
+
+def test_resume_propagates_docs_out_read_errors(spark, t1_path, tmp_path, monkeypatch):
+    """Once a run is committed, a docs_out read failure on resume must
+    raise: reading it as "nothing committed" would re-extract and re-commit
+    every doc (duplicate docs_out rows)."""
+    out = str(tmp_path / "out")
+    job.run(spark, t1_path, out, run_id="first", limit=40)
+    reader = type(spark.read)
+    real = reader.parquet
+
+    def flaky(self, *paths, **kw):
+        if any(str(p).endswith("docs_out") for p in paths):
+            raise OSError("transient docs_out read failure")
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(reader, "parquet", flaky)
+    with pytest.raises(OSError, match="transient"):
+        job.run(spark, t1_path, out, run_id="second", resume=True)
+    monkeypatch.undo()
+
+    assert job.committed_run_ids(out) == ["first"]
+    m = job.run(spark, t1_path, out, run_id="third", resume=True)
+    assert m["total_docs"] == 60
+    assert job.committed_view(spark, out, "docs_out").count() == 100

@@ -14,7 +14,7 @@ def t1_path(tmp_path_factory):
 
 def test_latest_view_keeps_newest_copy_per_doc(spark, t1_path, tmp_path):
     out = str(tmp_path / "out")
-    job.run(spark, t1_path, out, run_id="base", partitions=4)
+    job.run(spark, t1_path, out, run_id="base")
 
     # upstream changed 10 docs: re-extract JUST those (no --resume), with
     # modified content so the winner is observable
@@ -30,7 +30,7 @@ def test_latest_view_keeps_newest_copy_per_doc(spark, t1_path, tmp_path):
     import os
     os.makedirs(redo_dir)
     pq.write_table(rows_to_table(changed), redo_dir + "/part.parquet")
-    job.run(spark, redo_dir, out, run_id="redo", partitions=2)
+    job.run(spark, redo_dir, out, run_id="redo")
 
     # committed_view has duplicates for the 10 docs; latest_view does not
     assert job.committed_view(spark, out).count() == 110

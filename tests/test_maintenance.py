@@ -30,8 +30,8 @@ def _fingerprint(spark, out, table="spans_out"):
 
 def test_compact_preserves_data_and_consolidates_runs(spark, t1_path, tmp_path):
     out = str(tmp_path / "out")
-    job.run(spark, t1_path, out, run_id="r1", partitions=4, limit=60)
-    job.run(spark, t1_path, out, run_id="r2", partitions=4, resume=True)
+    job.run(spark, t1_path, out, run_id="r1", limit=60)
+    job.run(spark, t1_path, out, run_id="r2", resume=True)
     before = _fingerprint(spark, out)
     docs_before = _fingerprint(spark, out, "docs_out")
 
@@ -50,13 +50,13 @@ def test_compact_preserves_data_and_consolidates_runs(spark, t1_path, tmp_path):
     ) == ["r1", "r2"]
 
     # resume after compaction is still a no-op (docs_out survived intact)
-    m = job.run(spark, t1_path, out, run_id="r3", partitions=4, resume=True)
+    m = job.run(spark, t1_path, out, run_id="r3", resume=True)
     assert m["total_docs"] == 0
 
 
 def test_compact_twice_keeps_original_attribution(spark, t1_path, tmp_path):
     out = str(tmp_path / "out")
-    job.run(spark, t1_path, out, run_id="orig", partitions=4, limit=30)
+    job.run(spark, t1_path, out, run_id="orig", limit=30)
     compact(spark, out)
     compact(spark, out)
     lin = job.committed_view(spark, out, "lineage")
@@ -70,7 +70,7 @@ def test_compact_marker_switch_is_atomic(spark, t1_path, tmp_path):
     their marker files may still exist (the crash-window state): the
     committed set must already be exactly the new run."""
     out = str(tmp_path / "out")
-    job.run(spark, t1_path, out, run_id="old1", partitions=4, limit=40)
+    job.run(spark, t1_path, out, run_id="old1", limit=40)
     new_run = compact(spark, out)
     # recreate the crash-window state: old marker resurrected post-switch
     with open(os.path.join(out, "_commits", "old1"), "w") as f:
@@ -85,7 +85,7 @@ def test_compact_covers_detail_tables(spark, t1_path, tmp_path):
     """Compaction discovers EVERY table dir (incl. --details sidecars);
     leaving one out would orphan its committed data when markers retire."""
     out = str(tmp_path / "out")
-    job.run(spark, t1_path, out, run_id="d1", partitions=4, details=True)
+    job.run(spark, t1_path, out, run_id="d1", details=True)
     before = {t: _fingerprint(spark, out, t) for t in ("spans_out", "pages", "images", "tables")}
 
     compact(spark, out)
@@ -101,7 +101,7 @@ def test_orphaned_tmp_marker_is_inert_and_vacuumed(spark, t1_path, tmp_path):
     neither old nor new data), and vacuum must reclaim the tmp without
     touching the still-committed old run."""
     out = str(tmp_path / "out")
-    job.run(spark, t1_path, out, run_id="r1", partitions=4, limit=40)
+    job.run(spark, t1_path, out, run_id="r1", limit=40)
     before = _fingerprint(spark, out)
     # crash-window state: compaction's marker write died pre-replace
     with open(os.path.join(out, "_commits", ".compactdead.tmp"), "w") as f:
@@ -122,7 +122,7 @@ def test_compact_rejects_table_subset(spark, t1_path, tmp_path):
     from pdfplucker_spark.maintenance import discover_tables
 
     out = str(tmp_path / "out")
-    job.run(spark, t1_path, out, run_id="r1", partitions=4, limit=30)
+    job.run(spark, t1_path, out, run_id="r1", limit=30)
     with pytest.raises(ValueError, match="must name exactly"):
         compact(spark, out, tables=("spans_out",))
     # an unknown extra table is rejected up front too (not mid-rewrite)
@@ -138,9 +138,9 @@ def test_compact_merges_mixed_run_schemas(spark, t1_path, tmp_path):
     so provenance survives regardless of which footer Spark would have
     inferred the schema from."""
     out = str(tmp_path / "out")
-    job.run(spark, t1_path, out, run_id="first", partitions=4, limit=50)
+    job.run(spark, t1_path, out, run_id="first", limit=50)
     compact(spark, out)
-    job.run(spark, t1_path, out, run_id="second", partitions=4, resume=True)
+    job.run(spark, t1_path, out, run_id="second", resume=True)
     compact(spark, out)
     lin = job.committed_view(spark, out, "lineage")
     assert {r.source_run_id for r in lin.select("source_run_id").collect()} == {
@@ -157,8 +157,8 @@ def test_compact_clusters_files_by_doc_id(spark, t1_path, tmp_path):
     import pyarrow.parquet as pq
 
     out = str(tmp_path / "out")
-    job.run(spark, t1_path, out, run_id="c1", partitions=4, limit=50)
-    job.run(spark, t1_path, out, run_id="c2", partitions=4, resume=True)
+    job.run(spark, t1_path, out, run_id="c1", limit=50)
+    job.run(spark, t1_path, out, run_id="c2", resume=True)
     before = _fingerprint(spark, out)
 
     new_run = compact(spark, out, target_mb=0.05)  # force several files
@@ -200,7 +200,7 @@ def test_compact_fence_refuses_after_lease_theft(spark, t1_path, tmp_path, monke
     import pdfplucker_spark.maintenance as M
 
     out = str(tmp_path / "out_fence")
-    job.run(spark, t1_path, out, run_id="r1", partitions=4, limit=30)
+    job.run(spark, t1_path, out, run_id="r1", limit=30)
     before = job.committed_run_ids(out)
     before_fp = _fingerprint(spark, out)
     orig = M.committed_view
@@ -247,8 +247,8 @@ def test_release_lock_collision_logs_and_keeps_displaced_lease(
 
 def test_vacuum_removes_only_torn_runs_and_takes_lease(spark, t1_path, tmp_path):
     out = str(tmp_path / "out")
-    job.run(spark, t1_path, out, run_id="good", partitions=4, limit=50)
-    job.run(spark, t1_path, out, run_id="torn", partitions=4, resume=True)
+    job.run(spark, t1_path, out, run_id="good", limit=50)
+    job.run(spark, t1_path, out, run_id="torn", resume=True)
     os.remove(os.path.join(out, "_commits", "torn"))  # simulate crash
 
     # a live writer's lease blocks vacuum (it would delete in-flight data)
@@ -272,7 +272,7 @@ def test_table_stats_reports_committed_and_torn(spark, t1_path, tmp_path):
     from pdfplucker_spark.maintenance import table_stats
 
     out = str(tmp_path / "out_stats")
-    job.run(spark, t1_path, out, run_id="s1", partitions=4, limit=30)
+    job.run(spark, t1_path, out, run_id="s1", limit=30)
     # fake a torn run: data dir without a commit marker
     torn = _os.path.join(out, "spans_out", "run_id=torn1")
     _os.makedirs(torn)
@@ -296,7 +296,7 @@ def test_table_stats_distinguishes_superseded_from_torn(spark, t1_path, tmp_path
     from pdfplucker_spark.maintenance import table_stats
 
     out = str(tmp_path / "out_sup")
-    job.run(spark, t1_path, out, run_id="old1", partitions=4, limit=30)
+    job.run(spark, t1_path, out, run_id="old1", limit=30)
     # preserve the old run dir as if compact's cleanup crashed
     src = _run_dirs(out, "spans_out")["old1"]
     _sh.copytree(src, src + ".bak")
@@ -320,7 +320,7 @@ def test_compact_fence_aborts_on_takeover_at_commit_point(
     import pdfplucker_spark.maintenance as M
 
     out = str(tmp_path / "out_toctou")
-    job.run(spark, t1_path, out, run_id="r1", partitions=4, limit=30)
+    job.run(spark, t1_path, out, run_id="r1", limit=30)
     before = job.committed_run_ids(out)
     before_fp = _fingerprint(spark, out)
 

@@ -3,9 +3,10 @@ documents are asserted here so a refactor cannot silently lose them."""
 
 from pyspark.sql import functions as F
 
+from pdfplucker_spark.job import read_docs
 from pdfplucker_spark.operators.extract import extract_spans
 from pdfplucker_spark.operators.relational import q_pricing_summary, q_top_orders
-from pdfplucker_spark.plans.partitioning import balance_docs
+from pdfplucker_spark.plans.partitioning import fan_out
 
 SF = "/root/testdata/sf0.001"
 
@@ -31,15 +32,14 @@ def test_extract_bulk_path_has_no_exchange(spark, tmp_path):
     from pdfplucker_spark.sources.tables import derived_spans_nested
 
     docs = derived_spans_nested(spark, SF)
-    # materialize a parquet input so the plan is scan→extract, not derive
+    # materialize a multi-file parquet input so the plan is scan→extract,
+    # not derive, on the job's own read path
     p = str(tmp_path / "docs")
-    docs.write.parquet(p)
-    routed = balance_docs(spark.read.parquet(p), 8)
-    plan = _plan(extract_spans(routed))
-    # r10: the default path is scan → mapInArrow with NO exchange AND no
-    # second scan — byte-balanced scan splits are the balance (bytes ≈
-    # spans), and the old giant tier's union branch cost a second full
-    # input read (2x scan I/O at every scale)
+    docs.repartition(4).write.parquet(p)
+    plan = _plan(extract_spans(fan_out(read_docs(spark, p, "parquet"))))
+    # the bulk path is scan → mapInArrow with NO exchange AND no second
+    # scan — byte-balanced scan splits are the balance (bytes ≈ spans); the
+    # fan-out rule stays off on an input that splits (4 × 4 > 4 slots)
     assert plan.count("Exchange") == 0, plan[:3000]
     assert plan.count("FileScan") == 1, plan[:3000]
     assert "MapInArrow" in plan

@@ -21,7 +21,7 @@ from pdfplucker_spark import job
 
 spark = get_spark(app="submit_smoke", master="local[2]")
 data = write_tier("t1", WORK + "/data")
-m = job.run(spark, data, WORK + "/out", run_id="submit1", partitions=4, limit=40)
+m = job.run(spark, data, WORK + "/out", run_id="submit1", limit=40)
 print("SUBMIT_OK", m["total_docs"], m["failed_docs"])
 spark.stop()
 """
