@@ -569,6 +569,24 @@ FROM events GROUP BY user_id
 STREAM_INC_BATCHES = 4
 
 
+def _gate_waves(df, salt: str):
+    """``df`` with its arrival wave ``bno`` = md5-60bit(``{salt}:{doc_id}``)
+    mod ``STREAM_INC_BATCHES`` — the deterministic gate every registered
+    standing-index stream stages its waves by; each oracle replays it
+    with its own salt (``sql_md5_long``)."""
+    from pyspark.sql import functions as F
+
+    from pdfplucker_spark.functions.hashing import md5_long
+
+    return df.withColumn(
+        "bno",
+        (
+            md5_long(F.concat(F.lit(f"{salt}:"), F.col("doc_id").cast("string")))
+            % STREAM_INC_BATCHES
+        ).cast("int"),
+    )
+
+
 def stage_waves(docs_df, in_dir: str, waves=None, files_per_wave: int = 1):
     """Stage a (…, bno int) docs frame as EXACTLY ``files_per_wave``
     parquet files per wave under ``in_dir`` — ``{k:02d}.parquet`` for the
@@ -717,6 +735,116 @@ def _index_wave_paths(index_dir: str, before_bno: int, subdir: str = "") -> list
     return paths
 
 
+def _wave_stream(
+    spark: SparkSession,
+    input_dir: str,
+    output_dir: str,
+    checkpoint_dir: str,
+    files_per_wave: int,
+    label: str,
+    wave,
+    after_commit=None,
+):
+    """THE write side of every foreachBatch standing-index stream: the
+    wave source, the ascending-``bno`` loop, the retry-skip, the write
+    order and the availableNow query. Returns the started query.
+
+    ``wave(sp, cur, bno, prior) -> (result, {subdir: table}, [cached])``
+    is the operator's per-wave algebra: ``cur`` is the batch's rows of
+    wave ``bno``, ``prior(sub)`` the committed index dirs of the waves
+    before it (``_index_wave_paths`` of ``{output_dir}_index``), and the
+    returned frames are the wave's result, its index tables (``""`` is a
+    flat table at ``bno=k``) and the frames it persisted, unpersisted here
+    in ``finally`` — a 10⁹-doc drain must not accumulate one cached frame
+    per micro-batch, nor one per failed wave. ``after_commit(sp,
+    index_dir)`` runs after each wave this call writes.
+
+    Write order: result → index tables → ``bno-k`` marker
+    (``job._mark_committed``, an atomic tmp-write + rename). The marker is
+    written only when the wave returned index tables: a wave joins the
+    standing index only after ALL its tables landed. A wave that returns
+    none (a static index) is plain overwrite, idempotent under retry.
+
+    Retry-skip: a marker-committed wave is SKIPPED. The marker is written
+    LAST, so a standing marker proves the wave's result + index tables
+    fully landed in a prior run (a foreachBatch retry after a crash between
+    the marker write and the checkpoint commit replays the batch).
+    Re-OVERWRITING would delete committed data mid-rewrite — a second crash
+    would leave the marker pointing at torn parquet. Skipping keeps
+    committed waves immutable (the batch run_id-partition contract) and
+    makes retries truly idempotent. The skip's safety depends on the write
+    order, so it is pinned: a standing marker whose result dir is missing
+    means a reorder put the marker first (a retry would then silently drop
+    the wave's output) — fail loud instead.
+
+    ``files_per_wave`` must match the staging side (``stage_waves``): it
+    becomes ``maxFilesPerTrigger``, and because every wave stages EXACTLY
+    that many files sharing one mtime, each trigger pulls whole waves — a
+    trigger boundary never splits a wave."""
+    import functools
+    import os
+
+    from pyspark.sql import functions as F
+
+    from pdfplucker_spark.job import _mark_committed
+
+    index_dir = output_dir + "_index"
+    src = (
+        spark.readStream.schema(
+            "doc_id long, text string, lang string, source string, "
+            "n_chars long, bno int"
+        )
+        .option("maxFilesPerTrigger", files_per_wave)
+        .parquet(input_dir)
+    )
+
+    def _batch(batch_df, _batch_id):
+        sp = batch_df.sparkSession
+        # ascending-wave loop: even if the source coalesces several staged
+        # files into one micro-batch, earlier waves index before later
+        # waves screen — the wave boundary, not the trigger boundary, is
+        # the semantic unit
+        bnos = sorted(r.bno for r in batch_df.select("bno").distinct().collect())
+        for bno in bnos:
+            result_dir = os.path.join(output_dir, f"bno={bno}")
+            if bno in _committed_waves(index_dir):
+                if not os.path.isdir(result_dir):
+                    raise RuntimeError(
+                        f"{label}: wave {bno} is marker-committed but its "
+                        f"result dir {result_dir} is absent — the "
+                        "result-before-marker write ordering was violated; "
+                        "skipping would drop this wave's output"
+                    )
+                continue
+            res, tables, cached = wave(
+                sp,
+                batch_df.where(F.col("bno") == bno),
+                bno,
+                functools.partial(_index_wave_paths, index_dir, bno),
+            )
+            try:
+                res.write.mode("overwrite").parquet(result_dir)
+                wave_dir = os.path.join(index_dir, f"bno={bno}")
+                for sub, table in tables.items():
+                    table.write.mode("overwrite").parquet(
+                        os.path.join(wave_dir, sub) if sub else wave_dir
+                    )
+                if tables:
+                    _mark_committed(index_dir, _index_marker(bno))
+            finally:
+                for df in cached:
+                    df.unpersist()
+            if after_commit is not None:
+                after_commit(sp, index_dir)
+
+    return (
+        src.writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def compact_standing_index(
     spark: SparkSession,
     index_dir: str,
@@ -849,15 +977,8 @@ def stream_dedup_incremental(
     its ``bno-k`` marker renamed into ``{index}/_commits/`` — the same
     atomic-visibility contract the batch job's run_id partitions use, so
     a torn/partial wave dir can never leak into a later wave's screen.
-
-    ``files_per_wave`` must match the staging side (``stage_waves``): it
-    becomes ``maxFilesPerTrigger``, and because every wave stages EXACTLY
-    that many files sharing one mtime, each trigger pulls whole waves —
-    a trigger boundary can never split a wave, so the ascending-``bno``
-    loop's wave semantics hold at any wave width (r7 verdict #6: a
-    production wave is multi-file)."""
-    import os
-
+    Source, wave loop, write order, retry-skip and ``files_per_wave`` (a
+    production wave is multi-file, r7 verdict #6): ``_wave_stream``."""
     from pyspark.sql import functions as F
 
     from pdfplucker_spark.operators.dedup import (
@@ -868,116 +989,48 @@ def stream_dedup_incremental(
     )
     from pdfplucker_spark.plans.guards import DEFAULT_BUCKET_CAP, guarded_probe
 
-    index_dir = output_dir + "_index"
-
-    src = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long, bno int"
-        )
-        .option("maxFilesPerTrigger", files_per_wave)
-        .parquet(input_dir)
-    )
-
-    def _screen(batch_df, _batch_id):
-        sp = batch_df.sparkSession
-        # ascending-wave loop: even if the source coalesces several staged
-        # files into one micro-batch, earlier waves index before later
-        # waves screen — the wave boundary, not the trigger boundary, is
-        # the semantic unit
-        bnos = sorted(
-            r.bno for r in batch_df.select("bno").distinct().collect()
-        )
-        for bno in bnos:
-            committed = _committed_waves(index_dir)
-            if bno in committed:
-                # marker written LAST ⇒ a standing marker proves the wave's
-                # result + both index tables fully landed in a prior run
-                # (a foreachBatch retry after a crash between the marker
-                # write and the checkpoint commit replays the batch).
-                # Re-OVERWRITING here would delete committed data mid-
-                # rewrite — a second crash would leave the marker pointing
-                # at torn parquet. Skipping keeps committed waves immutable
-                # (the batch run_id-partition contract) and makes retries
-                # truly idempotent.
-                #
-                # The skip's safety depends on the WRITE ORDER below:
-                # result → index tables → marker. Pin it: a standing
-                # marker whose result dir is missing means a reorder put
-                # the marker first (a retry would then silently drop the
-                # wave's screening output) — fail loud instead (r7
-                # advice).
-                if not os.path.isdir(os.path.join(output_dir, f"bno={bno}")):
-                    raise RuntimeError(
-                        f"stream_dedup_incremental: wave {bno} is marker-"
-                        f"committed but its result dir {output_dir}/bno="
-                        f"{bno} is absent — the result-before-marker "
-                        "write ordering was violated; skipping would drop "
-                        "this wave's output"
-                    )
-                continue
-            cur = batch_df.where(F.col("bno") == bno)
-            # bands and toks each feed TWO consumers (candidate join +
-            # index write / verify union + index write): persist the sigs
-            # and toks, not the raw rows — the minhash fold is the
-            # expensive part and must run once per wave, not once per band
-            # branch of the union or per consumer
-            sigs = _sigs(cur).persist()
-            bands = _band_rows(sigs)
-            toks = cur.select(
-                "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
-            ).persist()
-            band_paths = _index_wave_paths(index_dir, bno, "bands")
-            if band_paths:
-                ib = sp.read.parquet(*band_paths)
-                it = sp.read.parquet(*_index_wave_paths(index_dir, bno, "toks"))
-                # the guarded-join invariant (CLAUDE.md): capping the INDEX
-                # side bounds the per-wave join at wave_size × cap even on
-                # a degenerate corpus (the wave bounds its own side); the
-                # cap never fires on honest corpora, so the oracle is
-                # unchanged — same treatment as dedup_incremental
-                screen = guarded_probe(
-                    ib.select(F.col("doc_id").alias("index_doc_id"), "band", "key"),
-                    ("band", "key"),
-                    DEFAULT_BUCKET_CAP,
-                    "stream_dedup_incremental",
-                )
-                probe = bands.select(F.col("doc_id").alias("batch_doc_id"), "band", "key")
-                cand = screen(probe).select("batch_doc_id", "index_doc_id").distinct()
-                all_toks = toks.unionByName(it)
-                res = _verify_jaccard(
-                    cand, all_toks, "batch_doc_id", "index_doc_id",
-                    JACCARD_THRESHOLD,
-                )
-            else:
-                res = sp.createDataFrame(
-                    [], "batch_doc_id long, index_doc_id long, jaccard double"
-                )
-            res.write.mode("overwrite").parquet(
-                os.path.join(output_dir, f"bno={bno}")
+    def wave(sp, cur, _bno, prior):
+        # bands and toks each feed TWO consumers (candidate join +
+        # index write / verify union + index write): persist the sigs
+        # and toks, not the raw rows — the minhash fold is the
+        # expensive part and must run once per wave, not once per band
+        # branch of the union or per consumer
+        sigs = _sigs(cur).persist()
+        bands = _band_rows(sigs)
+        toks = cur.select(
+            "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
+        ).persist()
+        band_paths = prior("bands")
+        if band_paths:
+            ib = sp.read.parquet(*band_paths)
+            it = sp.read.parquet(*prior("toks"))
+            # the guarded-join invariant (plans/guards.py): capping the INDEX
+            # side bounds the per-wave join at wave_size × cap even on
+            # a degenerate corpus (the wave bounds its own side); the
+            # cap never fires on honest corpora, so the oracle is
+            # unchanged — same treatment as dedup_incremental
+            screen = guarded_probe(
+                ib.select(F.col("doc_id").alias("index_doc_id"), "band", "key"),
+                ("band", "key"),
+                DEFAULT_BUCKET_CAP,
+                "stream_dedup_incremental",
             )
-            bands.write.mode("overwrite").parquet(
-                os.path.join(index_dir, f"bno={bno}", "bands")
+            probe = bands.select(F.col("doc_id").alias("batch_doc_id"), "band", "key")
+            cand = screen(probe).select("batch_doc_id", "index_doc_id").distinct()
+            all_toks = toks.unionByName(it)
+            res = _verify_jaccard(
+                cand, all_toks, "batch_doc_id", "index_doc_id",
+                JACCARD_THRESHOLD,
             )
-            toks.write.mode("overwrite").parquet(
-                os.path.join(index_dir, f"bno={bno}", "toks")
+        else:
+            res = sp.createDataFrame(
+                [], "batch_doc_id long, index_doc_id long, jaccard double"
             )
-            # the wave becomes index-visible ONLY here, after both tables
-            # landed: marker write is an atomic tmp-write + rename
-            # (job._mark_committed), idempotent under foreachBatch retry
-            from pdfplucker_spark.job import _mark_committed
+        return res, {"bands": bands, "toks": toks}, [sigs, toks]
 
-            _mark_committed(index_dir, _index_marker(bno))
-            # per-wave caches die with the wave — a 10⁹-doc drain must not
-            # accumulate one cached frame pair per micro-batch
-            sigs.unpersist()
-            toks.unpersist()
-
-    return (
-        src.writeStream.foreachBatch(_screen)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _wave_stream(
+        spark, input_dir, output_dir, checkpoint_dir, files_per_wave,
+        "stream_dedup_incremental", wave,
     )
 
 
@@ -995,14 +1048,9 @@ def stream_decontaminate_incremental(
     arrives as waves — each micro-batch shingles only its own docs and
     joins the index, so per-wave cost tracks the wave, never the corpus.
     Unlike the batch operator (which screens a 1/20 train slice), the
-    drained stream screens the ENTIRE train corpus, wave by wave.
-    Per-wave overwrite dirs make retries idempotent. ``files_per_wave``
-    must match the staging side (see ``stream_dedup_incremental``): with
-    the exact-file-count staging contract, ``maxFilesPerTrigger=
-    files_per_wave`` keeps trigger boundaries aligned to wave
-    boundaries."""
-    import os
-
+    drained stream screens the ENTIRE train corpus, wave by wave. The
+    waves add no index tables, so ``_wave_stream`` writes no marker and a
+    retry overwrites the wave's result dir (idempotent)."""
     from pyspark.sql import functions as F
 
     from pdfplucker_spark.operators.dedup import _SHINGLE_OVER_TOKENS
@@ -1027,48 +1075,22 @@ def stream_decontaminate_incremental(
         "stream_decontaminate_incremental",
     )
 
-    src = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long, bno int"
+    def wave(_sp, cur, _bno, _prior):
+        sh = cur.select(
+            F.col("doc_id").alias("train_doc_id"),
+            F.split("text", " ").alias("__tk"),
+        ).select("train_doc_id", F.explode(F.expr(_SHINGLE_OVER_TOKENS)).alias("g"))
+        res = (
+            screen(sh)
+            .groupBy("train_doc_id", "eval_doc_id")
+            .agg(F.count("*").alias("n_shared_ngrams"))
+            .where(F.col("n_shared_ngrams") >= DECONTAM_MIN_SHARED)
         )
-        .option("maxFilesPerTrigger", files_per_wave)
-        .parquet(input_dir)
-    )
+        return res, {}, []
 
-    def _screen(batch_df, _batch_id):
-        from pyspark.sql import functions as F
-
-        bnos = sorted(
-            r.bno for r in batch_df.select("bno").distinct().collect()
-        )
-        for bno in bnos:
-            sh = (
-                batch_df.where(F.col("bno") == bno)
-                .select(
-                    F.col("doc_id").alias("train_doc_id"),
-                    F.split("text", " ").alias("__tk"),
-                )
-                .select(
-                    "train_doc_id",
-                    F.explode(F.expr(_SHINGLE_OVER_TOKENS)).alias("g"),
-                )
-            )
-            res = (
-                screen(sh)
-                .groupBy("train_doc_id", "eval_doc_id")
-                .agg(F.count("*").alias("n_shared_ngrams"))
-                .where(F.col("n_shared_ngrams") >= DECONTAM_MIN_SHARED)
-            )
-            res.write.mode("overwrite").parquet(
-                os.path.join(output_dir, f"bno={bno}")
-            )
-
-    return (
-        src.writeStream.foreachBatch(_screen)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _wave_stream(
+        spark, input_dir, output_dir, checkpoint_dir, files_per_wave,
+        "stream_decontaminate_incremental", wave,
     )
 
 
@@ -1095,13 +1117,7 @@ def q_stream_decontaminate_incremental(spark: SparkSession, sf_dir: str):
         d.where(gate % SAMPLE_MOD == 0).write.mode("overwrite").parquet(
             in_dir + "_eval"
         )
-        train = d.where(gate % SAMPLE_MOD != 0).withColumn(
-            "bno",
-            (
-                md5_long(F.concat(F.lit("db:"), F.col("doc_id").cast("string")))
-                % STREAM_INC_BATCHES
-            ).cast("int"),
-        )
+        train = _gate_waves(d.where(gate % SAMPLE_MOD != 0), "db")
         stage_waves(train, in_dir, range(STREAM_INC_BATCHES))
 
     sink = _drain(
@@ -1176,11 +1192,7 @@ def stream_line_dedup_incremental(
     cuts at a wave > w. Per-wave join cost tracks the wave's segment set
     × the matched index rows; there is NO self-join, so no occupancy
     guard is needed (a hot segment is one counter cell). Index
-    visibility is the commit-marker protocol; write order result →
-    index → marker with the same retry-skip + result-presence pin as
-    the dedup stream."""
-    import os
-
+    visibility, write order and retry-skip: ``_wave_stream``."""
     from pyspark.sql import functions as F
 
     from pdfplucker_spark.operators.dedup import (
@@ -1188,92 +1200,58 @@ def stream_line_dedup_incremental(
         line_segment_rows,
     )
 
-    index_dir = output_dir + "_index"
-
-    src = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long, bno int"
+    def wave(sp, cur, bno, prior):
+        # persist: the exploded segment frame feeds the wave-count agg
+        # AND the flag join + reassembly. line_segment_rows is THE
+        # shared segmenter (tokenize hoisted — never re-split per
+        # segment; it also drops null-text docs, matching the oracle).
+        segs = line_segment_rows(cur).persist()
+        # this wave's per-segment distinct-doc counts: persisted — they
+        # feed the cumulative sum AND the index append
+        wc = (
+            segs.select("seg", "doc_id")
+            .distinct()
+            .groupBy("seg")
+            .agg(F.count("*").alias("n"))
+            .persist()
         )
-        .option("maxFilesPerTrigger", files_per_wave)
-        .parquet(input_dir)
-    )
+        prior_paths = prior()
+        total = wc
+        if prior_paths:
+            total = wc.unionByName(sp.read.parquet(*prior_paths))
+        boiler = (
+            total.groupBy("seg")
+            .agg(F.sum("n").alias("df"))
+            .where(F.col("df") >= LINE_DF_THRESHOLD)
+            .select("seg", F.lit(1).alias("b"))
+        )
+        flagged = segs.join(boiler, "seg", "left").select(
+            "doc_id", "seg_idx", "seg", F.coalesce("b", F.lit(0)).alias("b")
+        )
+        res = flagged.groupBy("doc_id").agg(
+            F.count("*").alias("n_segs"),
+            F.sum("b").alias("n_boiler_segs"),
+            F.expr(
+                "concat_ws(' ', transform(filter(array_sort(collect_list("
+                "struct(seg_idx, seg, b))), x -> x.b = 0), x -> x.seg))"
+            ).alias("clean_text"),
+        ).select(
+            "doc_id",
+            F.lit(bno).cast("int").alias("bno"),
+            "n_segs",
+            "n_boiler_segs",
+            "clean_text",
+        )
+        return res, {"": wc}, [segs, wc]
 
-    def _screen(batch_df, _batch_id):
-        sp = batch_df.sparkSession
-        bnos = sorted(r.bno for r in batch_df.select("bno").distinct().collect())
-        for bno in bnos:
-            committed = _committed_waves(index_dir)
-            if bno in committed:
-                if not os.path.isdir(os.path.join(output_dir, f"bno={bno}")):
-                    raise RuntimeError(
-                        f"stream_line_dedup_incremental: wave {bno} is "
-                        f"marker-committed but its result dir is absent — "
-                        "the result-before-marker write ordering was "
-                        "violated; skipping would drop this wave's output"
-                    )
-                continue
-            cur = batch_df.where(F.col("bno") == bno)
-            # persist: the exploded segment frame feeds the wave-count agg
-            # AND the flag join + reassembly. line_segment_rows is THE
-            # shared segmenter (tokenize hoisted — never re-split per
-            # segment; it also drops null-text docs, matching the oracle).
-            segs = line_segment_rows(cur).persist()
-            # this wave's per-segment distinct-doc counts: persisted — they
-            # feed the cumulative sum AND the index append
-            wc = (
-                segs.select("seg", "doc_id")
-                .distinct()
-                .groupBy("seg")
-                .agg(F.count("*").alias("n"))
-                .persist()
-            )
-            prior_paths = _index_wave_paths(index_dir, bno)
-            total = wc
-            if prior_paths:
-                total = wc.unionByName(sp.read.parquet(*prior_paths))
-            boiler = (
-                total.groupBy("seg")
-                .agg(F.sum("n").alias("df"))
-                .where(F.col("df") >= LINE_DF_THRESHOLD)
-                .select("seg", F.lit(1).alias("b"))
-            )
-            flagged = segs.join(boiler, "seg", "left").select(
-                "doc_id", "seg_idx", "seg", F.coalesce("b", F.lit(0)).alias("b")
-            )
-            res = flagged.groupBy("doc_id").agg(
-                F.count("*").alias("n_segs"),
-                F.sum("b").alias("n_boiler_segs"),
-                F.expr(
-                    "concat_ws(' ', transform(filter(array_sort(collect_list("
-                    "struct(seg_idx, seg, b))), x -> x.b = 0), x -> x.seg))"
-                ).alias("clean_text"),
-            ).select(
-                "doc_id",
-                F.lit(bno).cast("int").alias("bno"),
-                "n_segs",
-                "n_boiler_segs",
-                "clean_text",
-            )
-            res.write.mode("overwrite").parquet(
-                os.path.join(output_dir, f"bno={bno}")
-            )
-            wc.write.mode("overwrite").parquet(
-                os.path.join(index_dir, f"bno={bno}")
-            )
-            from pdfplucker_spark.job import _mark_committed
+    def compact(sp, index_dir):
+        if len(_index_entries(index_dir)) >= compact_every:
+            compact_standing_index(sp, index_dir, sum_over=(("seg",), "n"))
 
-            _mark_committed(index_dir, _index_marker(bno))
-            segs.unpersist()
-            wc.unpersist()
-            if compact_every and len(_index_entries(index_dir)) >= compact_every:
-                compact_standing_index(sp, index_dir, sum_over=(("seg",), "n"))
-
-    return (
-        src.writeStream.foreachBatch(_screen)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _wave_stream(
+        spark, input_dir, output_dir, checkpoint_dir, files_per_wave,
+        "stream_line_dedup_incremental", wave,
+        after_commit=compact if compact_every else None,
     )
 
 
@@ -1288,19 +1266,9 @@ def q_stream_line_dedup_incremental(spark: SparkSession, sf_dir: str):
     its OWN wave has crossed the threshold."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from pdfplucker_spark.functions.hashing import md5_long
-
     def _stage(sp, in_dir):
         d = sp.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        d = d.withColumn(
-            "bno",
-            (
-                md5_long(F.concat(F.lit("lb:"), F.col("doc_id").cast("string")))
-                % STREAM_INC_BATCHES
-            ).cast("int"),
-        )
+        d = _gate_waves(d, "lb")
         stage_waves(d, in_dir, range(STREAM_INC_BATCHES))
 
     # compact_every=3: with 4 waves, the standing counts index folds into
@@ -1382,82 +1350,43 @@ def stream_topk_terms(
     global sort), then a row_number over the K survivors only. All rank
     keys are integers + the term string (count DESC, term ASC), so
     cross-engine order is exact — no float-ordering hazards anywhere.
-    Commit-marker visibility; write order result → index → marker with
-    the same retry-skip + result-presence pin as the other streams."""
-    import os
-
+    Commit-marker visibility, write order and retry-skip:
+    ``_wave_stream``."""
     from pyspark.sql import Window, functions as F
 
-    index_dir = output_dir + "_index"
-
-    src = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long, bno int"
+    def wave(sp, cur, bno, prior):
+        # persisted: this wave's term counts feed the cumulative sum
+        # AND the index append
+        wc = (
+            cur.where(F.col("text").isNotNull())
+            .select(F.explode(F.split("text", " ")).alias("term"))
+            .groupBy("term")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .persist()
         )
-        .option("maxFilesPerTrigger", files_per_wave)
-        .parquet(input_dir)
-    )
+        prior_paths = prior()
+        total = wc
+        if prior_paths:
+            total = wc.unionByName(sp.read.parquet(*prior_paths))
+        topk = (
+            total.groupBy("term")
+            .agg(F.sum("n").alias("cum_cnt"))
+            .orderBy(F.desc("cum_cnt"), F.asc("term"))
+            .limit(TOPK_TERMS_K)
+        )
+        res = topk.select(
+            F.lit(bno).cast("int").alias("bno"),
+            F.row_number()
+            .over(Window.orderBy(F.desc("cum_cnt"), F.asc("term")))
+            .alias("rank"),
+            "term",
+            "cum_cnt",
+        )
+        return res, {"": wc}, [wc]
 
-    def _screen(batch_df, _batch_id):
-        sp = batch_df.sparkSession
-        bnos = sorted(r.bno for r in batch_df.select("bno").distinct().collect())
-        for bno in bnos:
-            committed = _committed_waves(index_dir)
-            if bno in committed:
-                if not os.path.isdir(os.path.join(output_dir, f"bno={bno}")):
-                    raise RuntimeError(
-                        f"stream_topk_terms: wave {bno} is marker-committed "
-                        "but its result dir is absent — the result-before-"
-                        "marker write ordering was violated; skipping would "
-                        "drop this wave's output"
-                    )
-                continue
-            cur = batch_df.where(
-                (F.col("bno") == bno) & F.col("text").isNotNull()
-            )
-            # persisted: this wave's term counts feed the cumulative sum
-            # AND the index append
-            wc = (
-                cur.select(F.explode(F.split("text", " ")).alias("term"))
-                .groupBy("term")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .persist()
-            )
-            prior_paths = _index_wave_paths(index_dir, bno)
-            total = wc
-            if prior_paths:
-                total = wc.unionByName(sp.read.parquet(*prior_paths))
-            topk = (
-                total.groupBy("term")
-                .agg(F.sum("n").alias("cum_cnt"))
-                .orderBy(F.desc("cum_cnt"), F.asc("term"))
-                .limit(TOPK_TERMS_K)
-            )
-            res = topk.select(
-                F.lit(bno).cast("int").alias("bno"),
-                F.row_number()
-                .over(Window.orderBy(F.desc("cum_cnt"), F.asc("term")))
-                .alias("rank"),
-                "term",
-                "cum_cnt",
-            )
-            res.write.mode("overwrite").parquet(
-                os.path.join(output_dir, f"bno={bno}")
-            )
-            wc.write.mode("overwrite").parquet(
-                os.path.join(index_dir, f"bno={bno}")
-            )
-            from pdfplucker_spark.job import _mark_committed
-
-            _mark_committed(index_dir, _index_marker(bno))
-            wc.unpersist()
-
-    return (
-        src.writeStream.foreachBatch(_screen)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _wave_stream(
+        spark, input_dir, output_dir, checkpoint_dir, files_per_wave,
+        "stream_topk_terms", wave,
     )
 
 
@@ -1469,19 +1398,9 @@ def q_stream_topk_terms(spark: SparkSession, sf_dir: str):
     cumulative-summed over waves, ranked per wave."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from pdfplucker_spark.functions.hashing import md5_long
-
     def _stage(sp, in_dir):
         d = sp.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        d = d.withColumn(
-            "bno",
-            (
-                md5_long(F.concat(F.lit("tt:"), F.col("doc_id").cast("string")))
-                % STREAM_INC_BATCHES
-            ).cast("int"),
-        )
+        d = _gate_waves(d, "tt")
         stage_waves(d, in_dir, range(STREAM_INC_BATCHES))
 
     sink = _drain(spark, sf_dir, "topkterms", _stage, stream_topk_terms)
@@ -1541,117 +1460,78 @@ def stream_cms_topk_terms(
     REGARDLESS of vocabulary size, the property that lets a 100 TB
     intake stream keep its heavy-hitter state in kilobytes. CMS is
     linear, so per-wave grids SUM-MERGE exactly like the counts index
-    (same commit-marker protocol, compactable without changing any
-    board). Per wave: the wave's own distinct terms are the candidates
-    (the stream never enumerates the historical vocabulary — that is
-    the sketch contract), each estimated against the cumulative grid
-    (min over rows), top-k by (estimate DESC, term ASC). Deterministic
-    md5 hash family ⇒ the oracle replays every wave's grid and board
-    exactly — a full hash-exact gate, not a within-bound flag."""
-    import os
-
+    (same ``_wave_stream`` commit-marker protocol, compactable without
+    changing any board). Per wave: the wave's own distinct terms are the
+    candidates (the stream never enumerates the historical vocabulary —
+    that is the sketch contract), each estimated against the cumulative
+    grid (min over rows), top-k by (estimate DESC, term ASC).
+    Deterministic md5 hash family ⇒ the oracle replays every wave's grid
+    and board exactly — a full hash-exact gate, not a within-bound flag."""
     from pyspark.sql import Window, functions as F
 
     from pdfplucker_spark.operators.sketches import CMS_D, cms_bucket as bucket
 
-    index_dir = output_dir + "_index"
-
-    src = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long, bno int"
+    def wave(sp, cur, bno, prior):
+        # persisted: the wave's term counts feed the grid build AND
+        # the candidate list
+        wc = (
+            cur.where(F.col("text").isNotNull())
+            .select(F.explode(F.split("text", " ")).alias("term"))
+            .groupBy("term")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .persist()
         )
-        .option("maxFilesPerTrigger", files_per_wave)
-        .parquet(input_dir)
-    )
-
-    def _screen(batch_df, _batch_id):
-        sp = batch_df.sparkSession
-        bnos = sorted(r.bno for r in batch_df.select("bno").distinct().collect())
-        for bno in bnos:
-            committed = _committed_waves(index_dir)
-            if bno in committed:
-                if not os.path.isdir(os.path.join(output_dir, f"bno={bno}")):
-                    raise RuntimeError(
-                        f"stream_cms_topk_terms: wave {bno} is marker-"
-                        "committed but its result dir is absent — the "
-                        "result-before-marker write ordering was violated"
-                    )
-                continue
-            cur = batch_df.where(
-                (F.col("bno") == bno) & F.col("text").isNotNull()
+        wave_grid = None
+        for i in range(CMS_D):
+            part = wc.select(
+                F.lit(i).alias("row_i"),
+                bucket(i, F.col("term")).alias("bucket"),
+                "n",
             )
-            # persisted: the wave's term counts feed the grid build AND
-            # the candidate list
-            wc = (
-                cur.select(F.explode(F.split("text", " ")).alias("term"))
-                .groupBy("term")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .persist()
-            )
-            wave_grid = None
-            for i in range(CMS_D):
-                part = wc.select(
-                    F.lit(i).alias("row_i"),
-                    bucket(i, F.col("term")).alias("bucket"),
-                    "n",
-                )
-                wave_grid = (
-                    part if wave_grid is None else wave_grid.unionByName(part)
-                )
             wave_grid = (
-                wave_grid.groupBy("row_i", "bucket")
-                .agg(F.sum("n").alias("n"))
-                .persist()  # feeds the cumulative sum AND the index append
+                part if wave_grid is None else wave_grid.unionByName(part)
             )
-            prior_paths = _index_wave_paths(index_dir, bno)
-            total = wave_grid
-            if prior_paths:
-                total = wave_grid.unionByName(sp.read.parquet(*prior_paths))
-            cum = total.groupBy("row_i", "bucket").agg(F.sum("n").alias("c"))
-            est = wc.select("term")
-            for i in range(CMS_D):
-                ci = cum.where(F.col("row_i") == i).select(
-                    F.col("bucket").alias(f"b{i}"), F.col("c").alias(f"c{i}")
-                )
-                est = est.join(
-                    F.broadcast(ci), bucket(i, F.col("term")) == F.col(f"b{i}")
-                )
-            board = (
-                est.select(
-                    "term",
-                    F.least(
-                        *[F.col(f"c{i}") for i in range(CMS_D)]
-                    ).alias("cms_estimate"),
-                )
-                .orderBy(F.desc("cms_estimate"), F.asc("term"))
-                .limit(TOPK_TERMS_K)
+        wave_grid = (
+            wave_grid.groupBy("row_i", "bucket")
+            .agg(F.sum("n").alias("n"))
+            .persist()  # feeds the cumulative sum AND the index append
+        )
+        prior_paths = prior()
+        total = wave_grid
+        if prior_paths:
+            total = wave_grid.unionByName(sp.read.parquet(*prior_paths))
+        cum = total.groupBy("row_i", "bucket").agg(F.sum("n").alias("c"))
+        est = wc.select("term")
+        for i in range(CMS_D):
+            ci = cum.where(F.col("row_i") == i).select(
+                F.col("bucket").alias(f"b{i}"), F.col("c").alias(f"c{i}")
             )
-            res = board.select(
-                F.lit(bno).cast("int").alias("bno"),
-                F.row_number()
-                .over(Window.orderBy(F.desc("cms_estimate"), F.asc("term")))
-                .alias("rank"),
+            est = est.join(
+                F.broadcast(ci), bucket(i, F.col("term")) == F.col(f"b{i}")
+            )
+        board = (
+            est.select(
                 "term",
-                "cms_estimate",
+                F.least(
+                    *[F.col(f"c{i}") for i in range(CMS_D)]
+                ).alias("cms_estimate"),
             )
-            res.write.mode("overwrite").parquet(
-                os.path.join(output_dir, f"bno={bno}")
-            )
-            wave_grid.write.mode("overwrite").parquet(
-                os.path.join(index_dir, f"bno={bno}")
-            )
-            from pdfplucker_spark.job import _mark_committed
+            .orderBy(F.desc("cms_estimate"), F.asc("term"))
+            .limit(TOPK_TERMS_K)
+        )
+        res = board.select(
+            F.lit(bno).cast("int").alias("bno"),
+            F.row_number()
+            .over(Window.orderBy(F.desc("cms_estimate"), F.asc("term")))
+            .alias("rank"),
+            "term",
+            "cms_estimate",
+        )
+        return res, {"": wave_grid}, [wave_grid, wc]
 
-            _mark_committed(index_dir, _index_marker(bno))
-            wave_grid.unpersist()
-            wc.unpersist()
-
-    return (
-        src.writeStream.foreachBatch(_screen)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _wave_stream(
+        spark, input_dir, output_dir, checkpoint_dir, files_per_wave,
+        "stream_cms_topk_terms", wave,
     )
 
 
@@ -1663,19 +1543,9 @@ def q_stream_cms_topk_terms(spark: SparkSession, sf_dir: str):
     CMS is the one sketch DuckDB can reproduce bit-for-bit)."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from pdfplucker_spark.functions.hashing import md5_long
-
     def _stage(sp, in_dir):
         d = sp.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        d = d.withColumn(
-            "bno",
-            (
-                md5_long(F.concat(F.lit("ct:"), F.col("doc_id").cast("string")))
-                % STREAM_INC_BATCHES
-            ).cast("int"),
-        )
+        d = _gate_waves(d, "ct")
         stage_waves(d, in_dir, range(STREAM_INC_BATCHES))
 
     sink = _drain(spark, sf_dir, "cmsterms", _stage, stream_cms_topk_terms)
@@ -1758,19 +1628,9 @@ def q_stream_dedup_incremental(spark: SparkSession, sf_dir: str):
     the per-wave index reads enforce."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from pdfplucker_spark.functions.hashing import md5_long
-
     def _stage(sp, in_dir):
         d = sp.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        d = d.withColumn(
-            "bno",
-            (
-                md5_long(F.concat(F.lit("sb:"), F.col("doc_id").cast("string")))
-                % STREAM_INC_BATCHES
-            ).cast("int"),
-        )
+        d = _gate_waves(d, "sb")
         stage_waves(
             d,
             in_dir,

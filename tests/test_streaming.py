@@ -650,44 +650,169 @@ def test_stream_dedup_retry_skips_marker_committed_wave(spark, tmp_path):
     assert _committed_waves(index_dir) == [0, 2]
 
 
-def test_stream_dedup_marker_without_output_raises(spark, tmp_path):
+# the four standing-index streams that commit their waves by marker
+# (stream_decontaminate_incremental's index is static: no marker)
+_MARKER_STREAMS = (
+    "stream_dedup_incremental",
+    "stream_line_dedup_incremental",
+    "stream_topk_terms",
+    "stream_cms_topk_terms",
+)
+
+
+def _two_wave_docs(spark):
+    """Six docs in two waves: text A in wave 0 and twice in wave 1 (a
+    cross-wave near-dup pair for the dedup stream, a segment crossing the
+    line-dedup threshold at wave 1, a leading term for the boards)."""
+    a = "alpha beta gamma delta epsilon zeta eta theta"
+    rows = [
+        (10, a, 0),
+        (11, "one two three four five six seven eight", 0),
+        (12, "red green blue alpha beta gamma delta epsilon", 0),
+        (20, a, 1),
+        (21, a, 1),
+        (22, "nine ten eleven twelve one two three four", 1),
+    ]
+    return spark.createDataFrame(
+        [(d, t, "en", "s", len(t), w) for d, t, w in rows],
+        "doc_id long, text string, lang string, source string, "
+        "n_chars long, bno int",
+    )
+
+
+@pytest.mark.parametrize("op", _MARKER_STREAMS)
+def test_stream_marker_without_output_raises(spark, tmp_path, op):
     """Round-8 ordering pin (r7 advice): the retry-skip is only safe
     because every wave's RESULT is written before its index tables and
     marker. A standing marker with NO result dir means that ordering was
     violated — the drain must fail loud instead of silently dropping the
-    wave's screening output on retry."""
+    wave's output on retry. The marker alone makes wave 0 committed
+    (membership reads markers, never data dirs)."""
     from pyspark.sql.streaming import StreamingQueryException
 
     from pdfplucker_spark.job import _mark_committed
-    from pdfplucker_spark.operators.dedup import _band_rows, _sigs
-    from pdfplucker_spark.streaming.stream import (
-        _index_marker,
-        stream_dedup_incremental,
-    )
+    from pdfplucker_spark.streaming import stream
 
-    docs = spark.createDataFrame(
-        [(10, "alpha beta gamma", "en", "s", 16, 0)],
-        "doc_id long, text string, lang string, source string, "
-        "n_chars long, bno int",
-    )
-    in_dir = f"{tmp_path}/in"
-    _stage_wave_files(spark, docs, in_dir)
+    in_dir, out_dir = f"{tmp_path}/in", f"{tmp_path}/out"
+    stream.stage_waves(_two_wave_docs(spark).where("bno = 0"), in_dir)
+    # committed wave 0 with NO out_dir/bno=0 — the simulated
+    # marker-before-result reorder
+    _mark_committed(out_dir + "_index", stream._index_marker(0))
 
-    out_dir = f"{tmp_path}/out"
-    index_dir = out_dir + "_index"
-    # committed wave 0: index tables + marker but NO out_dir/bno=0 —
-    # the simulated marker-before-result reorder
-    _band_rows(_sigs(docs)).write.parquet(
-        os.path.join(index_dir, "bno=0", "bands")
-    )
-    docs.selectExpr(
-        "doc_id", "array_distinct(split(text, ' ')) AS toks"
-    ).write.parquet(os.path.join(index_dir, "bno=0", "toks"))
-    _mark_committed(index_dir, _index_marker(0))
-
-    q = stream_dedup_incremental(spark, in_dir, out_dir, f"{tmp_path}/ckpt")
+    q = getattr(stream, op)(spark, in_dir, out_dir, f"{tmp_path}/ckpt")
     with pytest.raises(StreamingQueryException, match="result-before-marker"):
         q.awaitTermination(300)
+
+
+def _tree(root):
+    """(relative path, bytes, mtime_ns) of every file under ``root``."""
+    out = []
+    for dirpath, _dirs, names in os.walk(root):
+        for n in names:
+            p = os.path.join(dirpath, n)
+            with open(p, "rb") as f:
+                out.append((os.path.relpath(p, root), f.read(), os.stat(p).st_mtime_ns))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("op", _MARKER_STREAMS)
+def test_stream_retry_skips_committed_waves(spark, tmp_path, op):
+    """The retry contract, for every marker-writing stream: drain once,
+    drop waves >= 1 (marker, index dir, result dir), re-drain over a
+    FRESH checkpoint. The replay re-reads every input file, so wave 0
+    arrives again: it is marker-committed and must be skipped — its
+    result and index files keep their bytes AND mtimes — while wave 1 is
+    recomputed, and the output equals the first drain's."""
+    import shutil
+
+    from pdfplucker_spark.streaming import stream
+
+    in_dir, out_dir = f"{tmp_path}/in", f"{tmp_path}/out"
+    index_dir = out_dir + "_index"
+    stream.stage_waves(_two_wave_docs(spark), in_dir, range(2))
+
+    def drain(ckpt):
+        q = getattr(stream, op)(spark, in_dir, out_dir, f"{tmp_path}/{ckpt}")
+        assert q.awaitTermination(300)
+        return {
+            k: sorted(map(tuple, spark.read.parquet(f"{out_dir}/bno={k}").collect()))
+            for k in range(2)
+        }
+
+    first = drain("ck1")
+    assert first[1] and stream._committed_waves(index_dir) == [0, 1]
+    wave0 = (_tree(f"{out_dir}/bno=0"), _tree(f"{index_dir}/bno=0"))
+    shutil.rmtree(f"{out_dir}/bno=1")
+    shutil.rmtree(f"{index_dir}/bno=1")
+    os.remove(f"{index_dir}/_commits/{stream._index_marker(1)}")
+    assert stream._committed_waves(index_dir) == [0]
+
+    assert drain("ck2") == first
+    assert (_tree(f"{out_dir}/bno=0"), _tree(f"{index_dir}/bno=0")) == wave0
+    assert stream._committed_waves(index_dir) == [0, 1]
+
+
+@pytest.mark.parametrize("op", _MARKER_STREAMS)
+def test_stream_failed_wave_unpersists_its_frames(spark, tmp_path, op):
+    """A wave whose write fails still releases the frames it persisted: a
+    regular file at the output path makes wave 0's result write fail
+    after the wave cached its intermediates, and the failed drain must
+    leave the session's cache empty."""
+    from pyspark.sql.streaming import StreamingQueryException
+
+    from pdfplucker_spark.streaming import stream
+
+    in_dir, out_dir = f"{tmp_path}/in", f"{tmp_path}/out"
+    stream.stage_waves(_two_wave_docs(spark), in_dir, range(2))
+    open(out_dir, "w").close()
+    spark.catalog.clearCache()
+
+    q = getattr(stream, op)(spark, in_dir, out_dir, f"{tmp_path}/ckpt")
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(300)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_stream_write_side_goes_through_one_kernel():
+    """Every foreachBatch standing-index stream commits through ONE
+    kernel, ``stream._wave_stream``: it is the only function that calls
+    ``foreachBatch``, sets the wave-width ``maxFilesPerTrigger`` (the
+    other sources read a fixed 16 files per trigger) or carries the
+    result-presence pin's message, and ``_mark_committed`` is called only
+    there and in ``compact_standing_index``. A stream that hand-builds
+    its own wave loop fails here."""
+    import ast
+    import pathlib
+
+    from pdfplucker_spark.streaming import stream
+
+    tree = ast.parse(pathlib.Path(stream.__file__).read_text())
+    sites = {"foreachBatch": set(), "_mark_committed": set(), "maxFilesPerTrigger": [], "pin": set()}
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in ("foreachBatch", "_mark_committed"):
+                    sites[name].add(fn.name)
+                elif (
+                    name == "option"
+                    and len(node.args) == 2
+                    and isinstance(node.args[0], ast.Constant)
+                    and node.args[0].value == "maxFilesPerTrigger"
+                    and not isinstance(node.args[1], ast.Constant)
+                ):
+                    sites["maxFilesPerTrigger"].append(fn.name)
+            elif isinstance(node, ast.Constant) and "result-before-marker" in str(node.value):
+                sites["pin"].add(fn.name)
+    assert sites == {
+        "foreachBatch": {"_wave_stream"},
+        "_mark_committed": {"_wave_stream", "compact_standing_index"},
+        "maxFilesPerTrigger": ["_wave_stream"],
+        "pin": {"_wave_stream"},
+    }
 
 
 def test_stage_waves_multi_file_contract_and_drain(spark, tmp_path):
