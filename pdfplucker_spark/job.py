@@ -27,6 +27,7 @@ import re
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from pdfplucker_spark.metrics import (
@@ -66,37 +67,63 @@ def read_docs(spark, input_path: str, fmt: str) -> DataFrame:
     return spark.read.parquet(input_path)
 
 
-def committed_run_ids(output: str) -> list[str]:
-    """Runs whose ENTIRE output set landed durably. Under Iceberg this is
-    the snapshot log; the parquet fallback uses per-run commit markers
-    written only after every table append for the run succeeded.
+def _read_commits(output: str) -> tuple[dict[str, int], set[str]]:
+    """THE reader of the ``_commits/`` marker format ``_mark_committed``
+    writes: ``({marker name: seq}, superseded run ids)``, names sorted.
 
     A marker may carry a ``supersedes: r1 r2 ...`` line (written by
     compaction): the listed runs are excluded even if their marker files
     still exist, which makes a compaction's old→new switch ATOMIC — one
-    marker-file creation flips the whole committed set.
+    marker-file creation flips the whole committed set. ``seq`` orders
+    commits for latest_view; a legacy marker (no ``seq:`` line) or a bad
+    value reads as 0.
 
     Only real marker names count: dotfiles (``.{run_id}.tmp`` orphaned by a
     crash between _mark_committed's tmp write and os.replace) are NOT
     markers — honoring a dead tmp's ``supersedes:`` line would retire the
     old runs while the new run never committed, leaving readers with
     neither (and a later vacuum would delete both). vacuum() reclaims
-    stale tmps under the lease."""
+    stale tmps under the lease. An unreadable marker still names a
+    committed run (seq 0) but supersedes nothing."""
     d = os.path.join(output, "_commits")
     try:
         names = sorted(n for n in os.listdir(d) if not n.startswith("."))
     except FileNotFoundError:
-        return []
+        return {}, set()
+    seqs: dict[str, int] = {}
     superseded: set[str] = set()
     for n in names:
+        seq, sup = 0, []
         try:
             with open(os.path.join(d, n)) as f:
                 for line in f:
-                    if line.startswith("supersedes:"):
-                        superseded.update(line.split(":", 1)[1].split())
-        except OSError:
-            continue
-    return [n for n in names if n not in superseded]
+                    if line.startswith("seq:"):
+                        try:
+                            seq = int(line.split(":", 1)[1])
+                        except ValueError:
+                            seq = 0
+                    elif line.startswith("supersedes:"):
+                        sup += line.split(":", 1)[1].split()
+        except (OSError, UnicodeDecodeError):
+            seq, sup = 0, []
+        seqs[n] = seq
+        superseded.update(sup)
+    return seqs, superseded
+
+
+def commit_seqs(output: str) -> dict[str, int]:
+    """Commit order of the committed runs (marker seq; 0 for legacy
+    markers, lexical run_id breaks remaining ties deterministically)."""
+    seqs, superseded = _read_commits(output)
+    return {n: s for n, s in seqs.items() if n not in superseded}
+
+
+def committed_run_ids(output: str) -> list[str]:
+    """Runs whose ENTIRE output set landed durably. Under Iceberg this is
+    the snapshot log; the parquet fallback uses per-run commit markers
+    written only after every table append for the run succeeded, minus
+    the runs a compaction superseded (``_read_commits``)."""
+    return list(commit_seqs(output))
 
 
 def _mark_committed(output: str, run_id: str, supersedes: list[str] | None = None) -> None:
@@ -112,24 +139,6 @@ def _mark_committed(output: str, run_id: str, supersedes: list[str] | None = Non
         if supersedes:
             f.write("supersedes: " + " ".join(supersedes) + "\n")
     os.replace(tmp, os.path.join(d, run_id))
-
-
-def commit_seqs(output: str) -> dict[str, int]:
-    """Commit order of the committed runs (marker seq; 0 for legacy
-    markers, lexical run_id breaks remaining ties deterministically)."""
-    d = os.path.join(output, "_commits")
-    out: dict[str, int] = {}
-    for rid in committed_run_ids(output):
-        seq = 0
-        try:
-            with open(os.path.join(d, rid)) as f:
-                for line in f:
-                    if line.startswith("seq:"):
-                        seq = int(line.split(":", 1)[1].strip())
-        except (OSError, ValueError):
-            pass
-        out[rid] = seq
-    return out
 
 
 def latest_view(
@@ -508,18 +517,6 @@ def _run_locked(
         extract(docs.select("doc_id", "spans"), span_budget=span_budget), run_id
     )
 
-    # S12 live-progress analogue (processor.py:424-426): observed metrics
-    # ride the write action itself — no extra pass over the data.
-    from pyspark.sql import Observation
-
-    obs = Observation(f"extract_{run_id}")
-    extracted = extracted.observe(
-        obs,
-        F.count(F.lit(1)).alias("obs_docs"),
-        F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("obs_failed"),
-        F.sum("n_input_spans").alias("obs_spans"),
-    )
-
     # One extraction pass total: spans_out, each detail table, and docs_out
     # are separate write actions — without a persist the mapInArrow stage
     # re-runs per action (2-5x cost), and with ``limit`` set LocalLimit gives
@@ -530,7 +527,7 @@ def _run_locked(
 
     extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
 
-    def _write(df: DataFrame, name: str, mode: str = "append") -> None:
+    def _write(df: DataFrame, name: str) -> None:
         if fmt == "iceberg":
             # DataFrameWriterV2 against whatever catalog `output` names —
             # an Iceberg catalog on a real cluster, or the session catalog
@@ -555,39 +552,17 @@ def _run_locked(
             # docs_out scan become directory-level partition PRUNING (torn
             # runs are never even read) instead of a post-scan filter. One
             # directory per run — no small-file explosion.
-            df.write.mode(mode).partitionBy("run_id").parquet(
+            df.write.mode("append").partitionBy("run_id").parquet(
                 os.path.join(output, name)
             )
 
     detail_cols = ["pages", "images", "tables"] if details else []
     if layout == "nested":
-        _write(extracted.drop(*detail_cols), "spans_out")
+        spans_out = extracted.drop(*detail_cols)
     else:  # flat: the recommended 100 TB layout — pushdown-friendly columns
-        flat = extracted.select(
-            "run_id",
-            "partition_id",
-            "doc_id",
-            "status",
-            F.posexplode_outer("spans").alias("pos", "s"),
-        ).select(
-            "run_id",
-            "partition_id",
-            "doc_id",
-            "status",
-            F.col("s.kind").alias("kind"),
-            F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref"),
-            F.col("s.offset").alias("offset"),
+        spans_out = extracted.select(
+            "run_id", "partition_id", "doc_id", "status", F.inline_outer("spans")
         )
-        _write(flat, "spans_out")
-    if details:
-        for name in detail_cols:
-            _write(
-                extracted.select(
-                    "run_id", "doc_id", F.explode(name).alias("r")
-                ).select("run_id", "doc_id", "r.*"),
-                name,
-            )
 
     # Compact doc-level table: resume source + metrics/lineage input —
     # the accounting path never rescans span payloads.
@@ -614,19 +589,34 @@ def _run_locked(
     else:
         docs_out = docs_out.withColumn("metadata", F.lit(None).cast(METADATA_TYPE))
 
-    # Accounting derives from the PERSISTED docs_out frame (no read-back
-    # scan), and docs_out is written LAST: under Iceberg a run_id present in
-    # docs_out therefore guarantees every other table append for that run —
-    # including fails/lineage/metrics — already committed, which is exactly
-    # the premise the catalog committed_view semi-joins on. Under parquet
-    # the commit marker gates everything, so order is free there.
-    _write(fails_table(docs_out, run_id), "fails")
-    _write(lineage_table(docs_out), "lineage")
-    metrics_df = run_metrics(docs_out, run_id, initial_time=t0)
-    _write(metrics_df, "metrics")
-    row = metrics_df.collect()[0].asDict()
-    _write(docs_out, "docs_out")
-    extracted.unpersist()
+    # Released in ``finally``: a failed sink write must not leave the span
+    # payload cached in a long-lived session.
+    try:
+        _write(spans_out, "spans_out")
+        for name in detail_cols:
+            _write(extracted.select("run_id", "doc_id", F.inline(name)), name)
+        # Accounting (fails, lineage, the metrics row) derives from the
+        # PERSISTED docs_out frame (no read-back scan), and docs_out is
+        # written LAST: under Iceberg a run_id present in docs_out therefore
+        # guarantees every other table append for that run — including
+        # fails/lineage/metrics — already committed, which is exactly the
+        # premise the catalog committed_view semi-joins on. Under parquet
+        # the commit marker gates everything, so order is free there.
+        _write(fails_table(docs_out, run_id), "fails")
+        _write(lineage_table(docs_out), "lineage")
+        # The metrics aggregate runs once: its one row is both the returned
+        # dict and the metrics table append. The row goes back as an Arrow
+        # table, which reaches the JVM without a Python worker (a list of
+        # Rows takes a Python RDD, slower than re-running the aggregate).
+        metrics_df = run_metrics(docs_out, run_id, t0)
+        metrics = metrics_df.collect()[0].asDict()
+        _write(
+            spark.createDataFrame(pa.Table.from_pylist([metrics]), metrics_df.schema),
+            "metrics",
+        )
+        _write(docs_out, "docs_out")
+    finally:
+        extracted.unpersist()
     if fmt != "iceberg":
         # commit fence: even if the single-writer lease was stolen in a
         # takeover race window (a job outliving stale_sec), only the
@@ -647,11 +637,7 @@ def _run_locked(
             ),
             "commits",
         )
-    try:
-        row["observed"] = obs.get  # in-flight metrics from the write action
-    except Exception:
-        row["observed"] = None
-    return row
+    return metrics
 
 
 def main(argv=None):

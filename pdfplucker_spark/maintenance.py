@@ -34,6 +34,7 @@ from pyspark.sql import SparkSession, functions as F
 from pdfplucker_spark.job import (
     _acquire_lock,
     _fenced_commit,
+    _read_commits,
     _release_lock,
     committed_run_ids,
     committed_view,
@@ -85,10 +86,9 @@ def _vacuum_locked(output: str, tables) -> dict[str, list[str]]:
     # committed_run_ids, safe to reclaim under the lease (no writer can be
     # mid-commit while we hold it)
     d = os.path.join(output, "_commits")
-    live = committed | set()
     try:
         for n in os.listdir(d):
-            if n.startswith(".") or n not in live:
+            if n.startswith(".") or n not in committed:
                 os.remove(os.path.join(d, n))
     except FileNotFoundError:
         pass
@@ -214,26 +214,6 @@ def compact(
         _release_lock(lock, new_run)
 
 
-def _superseded_run_ids(output: str) -> set:
-    """Runs retired by a compact's ``supersedes:`` line — distinct from
-    torn runs (which mean a writer died mid-run)."""
-    d = os.path.join(output, "_commits")
-    out: set = set()
-    try:
-        names = [n for n in os.listdir(d) if not n.startswith(".")]
-    except FileNotFoundError:
-        return out
-    for n in names:
-        try:
-            with open(os.path.join(d, n)) as f:
-                for line in f:
-                    if line.startswith("supersedes:"):
-                        out.update(line.split(":", 1)[1].split())
-        except OSError:
-            continue
-    return out
-
-
 def table_stats(output: str) -> dict:
     """Read-only health report of an output location: per table, the
     committed / torn / superseded run counts, file counts, and bytes —
@@ -244,8 +224,8 @@ def table_stats(output: str) -> dict:
     vacuum/compact cleanup) is skipped, and a run committing mid-listing
     can appear torn for one report — transients a health check must
     tolerate anyway."""
-    committed = set(committed_run_ids(output))
-    superseded = _superseded_run_ids(output)
+    seqs, superseded = _read_commits(output)
+    committed = set(seqs) - superseded
     report: dict = {}
     for table in discover_tables(output):
         t = {

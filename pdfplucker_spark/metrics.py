@@ -32,9 +32,8 @@ def with_lineage_cols(extracted: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-def run_metrics(extracted: DataFrame, run_id: str, initial_time: float | None = None) -> DataFrame:
+def run_metrics(extracted: DataFrame, run_id: str, initial_time: float) -> DataFrame:
     """One metrics row per run; reads only small columns (column-pruned)."""
-    t0 = initial_time if initial_time is not None else time.time()
     agg = extracted.agg(
         F.count("*").alias("total_docs"),
         F.count("*").alias("processed_docs"),  # batch engine: all docs processed
@@ -48,8 +47,8 @@ def run_metrics(extracted: DataFrame, run_id: str, initial_time: float | None = 
     )
     return agg.select(
         F.lit(run_id).alias("run_id"),
-        F.lit(float(t0)).alias("initial_time"),
-        (F.lit(time.time()) - F.lit(float(t0))).alias("elapsed_time"),
+        F.lit(float(initial_time)).alias("initial_time"),
+        (F.lit(time.time()) - F.lit(float(initial_time))).alias("elapsed_time"),
         "total_docs",
         "processed_docs",
         "failed_docs",

@@ -58,12 +58,12 @@ def _drop_oversized_buckets(
     cap: int | None,
     log_label: str,
     counted: DataFrame | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, list[DataFrame]]:
     """``keys`` minus the rows whose key occupancy in ``counted`` (default
-    ``keys``) exceeds ``cap``. The over-cap set is persisted: the log count
-    and the broadcast share one aggregation."""
+    ``keys``) exceeds ``cap``, and the frames persisted here: the over-cap
+    set, so the log count and the broadcast share one aggregation."""
     if cap is None:
-        return keys
+        return keys, []
     dropped = (
         (keys if counted is None else counted)
         .groupBy(*key_cols)
@@ -72,7 +72,7 @@ def _drop_oversized_buckets(
         .persist()
     )
     _log_drops(dropped, key_cols, cap, log_label)
-    return keys.join(F.broadcast(dropped.select(*key_cols)), key_cols, "left_anti")
+    return keys.join(F.broadcast(dropped.select(*key_cols)), key_cols, "left_anti"), [dropped]
 
 
 def _pair(id_col: str, asymmetric: bool):
@@ -94,7 +94,7 @@ def guarded_self_join(
     ``b``; a pair appears once per shared key, so callers dedupe or count.
     ``keys`` is persisted here (count and both sides read it)."""
     cols = list(key_cols)
-    g = _drop_oversized_buckets(keys.persist(), cols, cap, log_label)
+    g, _ = _drop_oversized_buckets(keys.persist(), cols, cap, log_label)
     a, b = g.alias("a"), g.alias("b")
     on = reduce(lambda x, y: x & y, (F.col(f"a.{c}") == F.col(f"b.{c}") for c in cols))
     return a.join(b, on & _pair(id_col, asymmetric))
@@ -113,10 +113,17 @@ def guarded_probe(
     of one capped frame; dropping from the index side alone is then exact,
     as probe rows only meet the index through the equi-join. ``index`` is
     not persisted: every caller's is a file scan or a slice of a frame the
-    caller persists for its probe side."""
+    caller persists for its probe side. ``screen.cached`` lists the frames
+    the guard persisted: a caller that guards a fresh index per stream
+    wave unpersists them with the wave's own frames."""
     cols = list(key_cols)
-    ix = _drop_oversized_buckets(index, cols, cap, log_label, counted)
-    return lambda probe: probe.join(ix, cols)
+    ix, cached = _drop_oversized_buckets(index, cols, cap, log_label, counted)
+
+    def screen(probe: DataFrame) -> DataFrame:
+        return probe.join(ix, cols)
+
+    screen.cached = cached
+    return screen
 
 
 def guarded_prefix_join(

@@ -1000,6 +1000,7 @@ def stream_dedup_incremental(
         toks = cur.select(
             "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
         ).persist()
+        cached = [sigs, toks]
         band_paths = prior("bands")
         if band_paths:
             ib = sp.read.parquet(*band_paths)
@@ -1015,6 +1016,7 @@ def stream_dedup_incremental(
                 DEFAULT_BUCKET_CAP,
                 "stream_dedup_incremental",
             )
+            cached += screen.cached  # a fresh guard per wave
             probe = bands.select(F.col("doc_id").alias("batch_doc_id"), "band", "key")
             cand = screen(probe).select("batch_doc_id", "index_doc_id").distinct()
             all_toks = toks.unionByName(it)
@@ -1026,7 +1028,7 @@ def stream_dedup_incremental(
             res = sp.createDataFrame(
                 [], "batch_doc_id long, index_doc_id long, jaccard double"
             )
-        return res, {"bands": bands, "toks": toks}, [sigs, toks]
+        return res, {"bands": bands, "toks": toks}, cached
 
     return _wave_stream(
         spark, input_dir, output_dir, checkpoint_dir, files_per_wave,

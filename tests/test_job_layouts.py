@@ -27,7 +27,7 @@ def test_flat_layout_and_details(spark, tmp_path):
     }
     for doc_id, spans in gen_rows("t1"):
         exp = extract_doc(doc_id, spans)
-        # posexplode_outer keeps 0-span docs as one null-kind row
+        # inline_outer keeps 0-span docs as one null-kind row
         assert got[doc_id].n == len(exp["spans"])
 
     imgs = spark.read.parquet(os.path.join(out, "images"))

@@ -130,3 +130,69 @@ def test_resume_propagates_docs_out_read_errors(spark, t1_path, tmp_path, monkey
     m = job.run(spark, t1_path, out, run_id="third", resume=True)
     assert m["total_docs"] == 60
     assert job.committed_view(spark, out, "docs_out").count() == 100
+
+
+def test_sink_write_failure_releases_the_cache(spark, t1_path, tmp_path, monkeypatch):
+    """A sink write that raises must not leave the persisted extraction
+    payload cached in a long-lived session."""
+    writer = type(spark.range(1).write)
+    real = writer.parquet
+
+    def failing(self, path, *a, **kw):
+        if path.endswith("lineage"):
+            raise OSError("lineage write failed")
+        return real(self, path, *a, **kw)
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(writer, "parquet", failing)
+    with pytest.raises(OSError, match="lineage write failed"):
+        job.run(spark, t1_path, str(tmp_path / "out"), run_id="r")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_metrics_aggregate_runs_in_one_action(spark, t1_path, tmp_path, monkeypatch):
+    """The metrics aggregate — the run's only count(DISTINCT ...) — is
+    executed by one action: its collected row is both the returned dict
+    and the metrics table append. Every action the parquet path issues
+    (collect, count, parquet writes) records its optimized plan."""
+    plans = []
+
+    def record(cls, name, frame):
+        real = getattr(cls, name)
+
+        def action(self, *a, **kw):
+            plans.append(frame(self)._jdf.queryExecution().optimizedPlan().toString())
+            return real(self, *a, **kw)
+
+        monkeypatch.setattr(cls, name, action)
+
+    df = spark.range(1)
+    record(type(df), "collect", lambda d: d)
+    record(type(df), "count", lambda d: d)
+    record(type(df.write), "parquet", lambda w: w._df)
+    m = job.run(spark, t1_path, str(tmp_path / "out"), run_id="r")
+    monkeypatch.undo()
+    assert m["total_docs"] == 100
+    assert sum("count(distinct" in p for p in plans) == 1, plans
+
+
+def test_metrics_table_schema_and_rows(spark, t1_path, tmp_path):
+    """The metrics table keeps its schema, and each row equals the dict
+    the run returned — for a run with docs and for an empty resume run
+    (NULL sums)."""
+    out = str(tmp_path / "out")
+    ms = [
+        job.run(spark, t1_path, out, run_id="full"),
+        job.run(spark, t1_path, out, run_id="empty", resume=True),
+    ]
+    assert ms[1]["total_docs"] == 0 and ms[1]["total_pages"] is None
+    metrics = spark.read.parquet(os.path.join(out, "metrics"))
+    assert metrics.schema.simpleString() == (
+        "struct<initial_time:double,elapsed_time:double,total_docs:bigint,"
+        "processed_docs:bigint,failed_docs:bigint,success_rate:double,"
+        "total_input_spans:bigint,total_pages:bigint,total_images:bigint,"
+        "total_tables:bigint,run_id:string>"
+    )
+    assert [r.asDict() for r in metrics.orderBy("run_id").collect()] == [
+        ms[1], ms[0]
+    ]

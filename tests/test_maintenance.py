@@ -397,3 +397,53 @@ def test_cli_compact_and_vacuum_index(spark, tmp_path):
         for r in spark.read.parquet(*_index_wave_paths(idx, 3)).collect()
     }
     assert merged == {("shared", 3), ("seg0", 2), ("seg1", 2), ("seg2", 2)}
+
+
+def test_commit_marker_reader_rules(tmp_path):
+    """``job._read_commits`` is the one marker reader, and the three
+    public results keep their rules: a dotfile tmp is never a marker, an
+    unreadable marker names a committed run (seq 0) but supersedes
+    nothing, and a legacy or bad ``seq`` reads as 0."""
+    from pdfplucker_spark.maintenance import table_stats
+
+    out = str(tmp_path)
+    assert job.committed_run_ids(out) == [] and job.commit_seqs(out) == {}
+    d = tmp_path / "_commits"
+    d.mkdir()
+    (d / "a").write_text("ok\n")  # legacy: no seq line
+    (d / "b").write_text("ok\nseq: 7\n")
+    (d / "c").write_text("ok\nseq: bad\nsupersedes: a\n")
+    (d / ".d.tmp").write_text("ok\nseq: 9\nsupersedes: b\n")  # dead tmp
+    (d / "e").mkdir()  # unreadable marker
+    for rid in ("a", "b", "z"):
+        (tmp_path / "spans_out" / f"run_id={rid}").mkdir(parents=True)
+    assert job.committed_run_ids(out) == ["b", "c", "e"]
+    assert job.commit_seqs(out) == {"b": 7, "c": 0, "e": 0}
+    stats = table_stats(out)["spans_out"]
+    assert (stats["committed_runs"], stats["superseded_runs"], stats["torn_runs"]) == (1, 1, 1)
+
+
+def test_commit_marker_lines_are_parsed_in_one_place():
+    """The marker line prefixes ``seq:`` / ``supersedes:`` are spelled
+    only by the writer (``job._mark_committed``) and the one reader
+    (``job._read_commits``): another parser of the format fails here."""
+    import ast
+    import pathlib
+
+    import pdfplucker_spark
+
+    pkg = pathlib.Path(pdfplucker_spark.__file__).parent
+    sites = set()
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and node.value.startswith(("seq:", "supersedes:"))
+                ):
+                    sites.add(f"{path.relative_to(pkg)}:{fn.name}")
+    assert sites == {"job.py:_read_commits", "job.py:_mark_committed"}, sites

@@ -773,6 +773,23 @@ def test_stream_failed_wave_unpersists_its_frames(spark, tmp_path, op):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_stream_dedup_drain_releases_each_waves_guard(spark, tmp_path):
+    """Wave 1 of the dedup stream guards the standing index it probes,
+    and the guard persists its over-cap set: that frame is released with
+    the wave's own frames, so a clean 2-wave drain leaves nothing cached
+    (one frame per wave >= 1 would pile up over a long drain)."""
+    from pdfplucker_spark.streaming import stream
+
+    in_dir, out_dir = f"{tmp_path}/in", f"{tmp_path}/out"
+    stream.stage_waves(_two_wave_docs(spark), in_dir, range(2))
+    spark.catalog.clearCache()
+
+    q = stream.stream_dedup_incremental(spark, in_dir, out_dir, f"{tmp_path}/ckpt")
+    assert q.awaitTermination(300)
+    assert stream._committed_waves(out_dir + "_index") == [0, 1]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_stream_write_side_goes_through_one_kernel():
     """Every foreachBatch standing-index stream commits through ONE
     kernel, ``stream._wave_stream``: it is the only function that calls
