@@ -378,10 +378,6 @@ EDGE_DOCS: List[Tuple[str, List[Dict]]] = [
 ]
 
 
-def edge_rows() -> List[Tuple[str, List[Dict]]]:
-    return list(EDGE_DOCS)
-
-
 if __name__ == "__main__":
     import sys
 

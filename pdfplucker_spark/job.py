@@ -175,12 +175,14 @@ def latest_view(
         "doc_id", "run_id"
     )
     # commit order attaches via a BROADCAST join on the tiny (run_id, seq)
-    # frame — one row per committed run. (A per-run CASE chain would grow
-    # the expression tree with run count: 10k compactions-worth of history
-    # is a 10k-branch expression per row.)
+    # frame — one row per committed run, sent as an Arrow table (a list of
+    # Rows takes a Python RDD). A per-run CASE chain would grow the
+    # expression tree with run count: 10k compactions-worth of history is
+    # a 10k-branch expression per row.
     if seqs:
         seq_df = spark.createDataFrame(
-            list(seqs.items()), "run_id string, commit_seq long"
+            pa.table({"run_id": list(seqs), "commit_seq": list(seqs.values())}),
+            "run_id string, commit_seq long",
         )
         docs = docs.join(F.broadcast(seq_df), "run_id", "left").withColumn(
             "commit_seq", F.coalesce("commit_seq", F.lit(0))
@@ -633,7 +635,8 @@ def _run_locked(
         # (latest_view coalesces), same as a legacy parquet marker.
         _write(
             spark.createDataFrame(
-                [(run_id, time.time_ns())], "run_id string, seq long"
+                pa.table({"run_id": [run_id], "seq": [time.time_ns()]}),
+                "run_id string, seq long",
             ),
             "commits",
         )

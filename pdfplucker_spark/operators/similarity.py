@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pdfplucker_spark.functions.hashing import md5_long, sql_md5_long
@@ -382,16 +383,45 @@ def _ivf_centroids(emb, k: int = IVF_K):
     )
 
 
-def _ivf_assigned_with(emb, cents):
-    """(vec_id, cid) via map-only broadcast argmax against ``cents``
-    (a (cid, cv) frame): the K centroids aggregate into ONE broadcast array
-    row, each vector picks its argmax with a higher-order fold — no
-    shuffle of the N-row side at any N."""
-    crow = cents.agg(
+def _ivf_crow(cents):
+    """The K centroids of a (cid, cv) frame as ONE sorted ``cents`` array
+    row — the broadcast side of every argmax."""
+    return cents.agg(
         F.sort_array(F.collect_list(F.struct("cid", "cv"))).alias("cents")
     )
+
+
+def _ivf_argmax(emb, crow, *cols):
+    """``cols`` of ``emb`` plus ``cid``, each vector's argmax against the
+    ``crow`` array row by a higher-order fold: a map-only broadcast
+    argmax, no shuffle of the N-row side at any N."""
     return emb.crossJoin(F.broadcast(crow)).select(
-        "vec_id", F.expr(_IVF_BEST).alias("cid")
+        *cols, F.expr(_IVF_BEST).alias("cid")
+    )
+
+
+def _ivf_assigned_with(emb, cents):
+    """(vec_id, cid) against ``cents`` (a (cid, cv) frame)."""
+    return _ivf_argmax(emb, _ivf_crow(cents), "vec_id")
+
+
+def _ivf_cell_means(emb, crow):
+    """The k-means UPDATE step: per (cid, dim) cell of ``emb`` assigned
+    against ``crow``, ``n_vecs`` and the mean ``m`` — one posexplode and
+    one hash aggregation, K·D cells. ``cid`` is a column of the scan (no
+    join back to an assignment frame), computed in its own projection
+    BELOW the posexplode: beside it, the argmax fold would run once per
+    exploded cell (D×). Sums go through exact DECIMAL (order-independent;
+    a double sum differs per partial-agg order) and ONE double division —
+    decimal division would truncate at engine-specific scales."""
+    cells = _ivf_argmax(
+        emb, crow, F.col("embedding").cast("array<double>").alias("v")
+    ).select("cid", F.posexplode("v").alias("dim", "v"))
+    return cells.groupBy("cid", "dim").agg(
+        F.count("*").alias("n_vecs"),
+        (
+            F.sum(F.col("v").cast("decimal(27,10)")).cast("double") / F.count("*")
+        ).alias("m"),
     )
 
 
@@ -664,27 +694,14 @@ FROM lab
 
 
 def q_sim_ivf_recenter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The k-means UPDATE step for the IVF index: per assigned centroid,
-    the mean embedding — emitted FLAT as (cid, dim, centroid_val) rows so
-    no array reassembly (and no collect_list ordering hazard) is needed;
-    production folds this back with array_agg over sorted dims. Sums go
-    through DECIMAL so the mean is exact and order-independent — a double
-    sum would hash-differently between engines per partial-agg order. One
-    posexplode + one hash aggregation on (cid, dim): K*D cells, uniform."""
+    """The k-means UPDATE step for the IVF index (``_ivf_cell_means``
+    against the seed centroids), emitted FLAT as (cid, dim, n_vecs,
+    centroid_val) rows: no array reassembly, so no collect_list ordering
+    hazard. The decimal sum makes each mean exact and order-independent,
+    so both engines agree bit for bit."""
     emb = load(spark, sf_dir, "embeddings")
-    assigned = _ivf_assigned(emb)
-    cells = emb.join(assigned, "vec_id").select(
-        "cid", F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "v")
-    )
-    # exact decimal SUM (order-independent), then ONE double division —
-    # decimal division would truncate at engine-specific scales
-    return cells.groupBy("cid", "dim").agg(
-        F.count("*").alias("n_vecs"),
-        F.round(
-            F.sum(F.col("v").cast("decimal(27,10)")).cast("double")
-            / F.count("*"),
-            8,
-        ).alias("centroid_val"),
+    return _ivf_cell_means(emb, _ivf_crow(_ivf_centroids(emb))).select(
+        "cid", "dim", "n_vecs", F.round("m", 8).alias("centroid_val")
     )
 
 
@@ -712,26 +729,24 @@ FROM cells GROUP BY cid, dim
 # assign+recenter steps in both engines)
 KMEANS_MAX_ITERS = 25
 
-def _kmeans_recenter(emb, assigned):
-    """Per-cluster mean embeddings as (cid, cv) arrays. Sums go through
-    exact DECIMAL (order-independent — a double sum would differ per
-    partial-agg order and make the fit nondeterministic), ONE double
-    division per cell, arrays reassembled by sorted dim (no collect_list
-    ordering hazard)."""
-    cells = emb.join(assigned, "vec_id").select(
-        "cid",
-        F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "v"),
-    )
-    means = cells.groupBy("cid", "dim").agg(
-        (
-            F.sum(F.col("v").cast("decimal(27,10)")).cast("double") / F.count("*")
-        ).alias("m")
-    )
-    return means.groupBy("cid").agg(
-        F.expr("transform(array_sort(collect_list(struct(dim, m))), x -> x.m)").alias(
-            "cv"
-        )
-    )
+# the fit's centroid state on the driver, as Arrow: the (cid, cv) rows
+# it returns, and the one-row sorted ``cents`` array each iteration
+# broadcasts (the ``_ivf_crow`` shape)
+_CENTS = pa.schema([("cid", pa.int32()), ("cv", pa.list_(pa.float64()))])
+_CROW = pa.schema([("cents", pa.list_(pa.struct(_CENTS)))])
+
+
+def _movement(new, old):
+    """A centroid's squared move as the engine fold computes it: sequential
+    ``(a-b)*(a-b)`` sums. None where that fold is NULL: a NULL array or
+    cell, or arrays of different lengths (``zip_with`` pads with NULLs)."""
+    d2 = 0.0
+    try:
+        for a, b in zip(new, old, strict=True):
+            d2 += (a - b) * (a - b)
+    except (TypeError, ValueError):
+        return None
+    return d2
 
 
 def kmeans_fit(emb, max_iters: int = KMEANS_MAX_ITERS, seeds=None, k: int = IVF_K):
@@ -739,20 +754,23 @@ def kmeans_fit(emb, max_iters: int = KMEANS_MAX_ITERS, seeds=None, k: int = IVF_
     (map-only, no shuffle of the N-row side) → decimal-exact RECENTER (one
     hash aggregation on (cid, dim) — K·D cells) until no centroid moves.
 
-    Loop hygiene mirrors ``connected_components`` (pipeline.py): the only
-    driver traffic per iteration is the 1-row movement aggregate, and the
-    K-row centroid frame is ``localCheckpoint``-ed every iteration so plan
-    depth stays O(1) in iteration count instead of compounding the whole
-    fit history into one lineage. Empty clusters keep their previous
-    centroid (the standard Lloyd convention). Exact-zero movement is the
-    stop condition: identical assignments give bit-identical decimal means,
-    so the fixpoint is exact, not an epsilon race. ``max_iters`` is a
-    safety net that LOGS when hit."""
+    The loop state is the K×D centroids as a driver ``{cid: cv}`` map, so
+    an iteration is ONE Spark query: the sorted centroid array goes out as
+    a one-row Arrow table broadcast against ``emb``, and the K·D cell
+    means come back with ``toArrow()``. The driver reassembles each array
+    in dim order, carries empty clusters' previous centroid (the standard
+    Lloyd convention) and tests movement with the same sequential fold.
+    No lineage grows across iterations, so nothing is checkpointed.
+    Exact-zero movement is the stop condition: identical assignments give
+    bit-identical decimal means, so the fixpoint is exact, not an epsilon
+    race (``== 0.0`` and NaN decide the same under any summation order).
+    ``max_iters`` is a safety net that LOGS when hit."""
     import logging
     import math
 
-    # emb feeds BOTH the assign scan and the recenter join every iteration
-    # (up to 2·max_iters source scans unpersisted)
+    spark = emb.sparkSession
+    # emb feeds the cell scan of every iteration (up to max_iters source
+    # scans unpersisted)
     emb = emb.persist()
     # ``seeds``: an explicit (cid, cv) seed frame — the sampled-fit path
     # (``q_sim_semdedup_sampled``) seeds from its own sample; default is
@@ -760,52 +778,40 @@ def kmeans_fit(emb, max_iters: int = KMEANS_MAX_ITERS, seeds=None, k: int = IVF_
     # the default seeding only (a caller-supplied seed frame fixes K
     # itself): at 10⁹ vectors K scales ∝ N / target-cluster-size, so the
     # cluster count is a CALL parameter, not a module constant (r6 advice).
-    cents = _ivf_centroids(emb, k) if seeds is None else seeds
-    converged = False
-    movement = None
+    seed = _ivf_centroids(emb, k) if seeds is None else seeds
+    cents = {r.cid: r.cv for r in seed.collect()}
     for _ in range(max_iters):
-        assigned = _ivf_assigned_with(emb, cents)
-        new_c = _kmeans_recenter(emb, assigned)
-        merged = (
-            cents.withColumnRenamed("cv", "old_cv")
-            .join(new_c, "cid", "left")
-            .select(
-                "cid",
-                F.coalesce("cv", F.col("old_cv")).alias("cv"),
-                "old_cv",
-            )
-            .localCheckpoint()  # K rows: materialize + truncate lineage
+        rows = [{"cid": c, "cv": cv} for c, cv in sorted(cents.items())]
+        crow = spark.createDataFrame(pa.Table.from_pydict({"cents": [rows]}, _CROW))
+        means = (
+            _ivf_cell_means(emb, crow)
+            .toArrow()
+            .sort_by([("cid", "ascending"), ("dim", "ascending")])
         )
-        movement = (
-            merged.select(
-                F.expr(
-                    "aggregate(zip_with(cv, old_cv, (a,b) -> (a-b)*(a-b)), "
-                    "0D, (s,x) -> s+x)"
-                ).alias("d2")
-            )
-            .agg(F.max("d2"))
-            .collect()[0][0]
-        )
-        cents = merged.select("cid", "cv")
-        # None = empty corpus (max over zero rows) — nothing can ever move;
+        new: dict[int, list] = {}
+        for cid, m in zip(means["cid"].to_pylist(), means["m"].to_pylist()):
+            new.setdefault(cid, []).append(m)
+        old, cents = cents, {c: new.get(c, cv) for c, cv in cents.items()}
+        moved = [d for d in map(_movement, cents.values(), old.values()) if d is not None]
         # NaN = a degenerate centroid poisoned the scores — looping further
-        # cannot recover, and NaN != 0.0 would burn every iteration
-        if movement is None or movement == 0.0:
-            converged = True
-            break
-        if math.isnan(movement):
+        # cannot recover, and NaN != 0.0 would burn every iteration. An
+        # empty corpus has no centroid to move: converged at once
+        if any(math.isnan(d) for d in moved):
             logging.getLogger(__name__).warning(
                 "kmeans_fit: NaN centroid movement (degenerate centroid?) — "
                 "stopping with the current centroids"
             )
             break
-    emb.unpersist()
-    if not converged and not (movement is not None and math.isnan(movement)):
+        if not any(moved):
+            break
+    else:
         logging.getLogger(__name__).warning(
             "kmeans_fit: hit the %d-iteration safety cap before convergence",
             max_iters,
         )
-    return cents
+    emb.unpersist()
+    rows = [{"cid": c, "cv": cv} for c, cv in sorted(cents.items())]
+    return spark.createDataFrame(pa.Table.from_pylist(rows, _CENTS))
 
 
 def q_sim_kmeans_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -823,8 +829,8 @@ def q_sim_kmeans_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay argument does NOT cover that path — the driver corpora are
     finite-valued (asserted by tests/test_kmeans.py::test_embeddings_finite),
     which keeps the path unreachable in oracle-compared runs. The pure-Python
-    replay pytest (tests/test_kmeans.py) additionally gates the loop hygiene
-    (checkpoint cadence, empty-cluster carry, movement scalar)."""
+    replay pytest (tests/test_kmeans.py) additionally gates the driver-side
+    loop (array reassembly, empty-cluster carry, movement fold)."""
     emb = load(spark, sf_dir, "embeddings")
     cents = kmeans_fit(emb, max_iters=KMEANS_MAX_ITERS)
     return cents.select(
@@ -994,10 +1000,11 @@ def kcenter_sample(emb, k: int = KCENTER_K):
     against the new center baked as an exact double-literal array) and a
     TakeOrdered(1) argmax (per-partition top-1, driver merges partition
     winners) — no shuffle at any N, k rows of driver traffic total. The
-    state frame is ``localCheckpoint``-ed per round so each argmax costs
-    exactly one pass and plan depth stays O(1) in k. Ties break on
-    vec_id ASC; already-chosen ids are excluded explicitly (an all-
-    duplicates corpus would otherwise re-pick at best_d2 = 0).
+    state frame is LAZILY ``localCheckpoint``-ed per round: the next
+    round's argmax scans every partition, so it fills the checkpoint in
+    its own job (one job per round), and plan depth stays O(1) in k.
+    Ties break on vec_id ASC; already-chosen ids are excluded explicitly
+    (an all-duplicates corpus would otherwise re-pick at best_d2 = 0).
 
     Returns (sel_seq, vec_id, coverage_d2): coverage_d2 is the point's
     min squared distance to the previously chosen set at selection time —
@@ -1023,7 +1030,7 @@ def kcenter_sample(emb, k: int = KCENTER_K):
         cur = (
             pts.where(F.col("vec_id") != int(seed.vec_id))
             .select("vec_id", "v", _d2_cols(F.col("v"), cvec).alias("best_d2"))
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
         for i in range(2, k + 1):
             cand = (
@@ -1046,7 +1053,7 @@ def kcenter_sample(emb, k: int = KCENTER_K):
                             "best_d2", _d2_cols(F.col("v"), cvec)
                         ).alias("best_d2"),
                     )
-                    .localCheckpoint()
+                    .localCheckpoint(eager=False)
                 )
     return spark.createDataFrame(
         out, "sel_seq int, vec_id long, coverage_d2 double"
@@ -1350,17 +1357,11 @@ def _ivfpq_base(emb):
     """(vec_id, v, cid) — the corpus with its coarse assignment, the
     nprobe-independent input the recall sweep persists and probes at
     several breadths. Map-only broadcast argmax."""
-    crow_ivf = _ivf_centroids(emb).agg(
-        F.sort_array(F.collect_list(F.struct("cid", "cv"))).alias("cents")
-    )
-    return (
-        emb.where(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(crow_ivf))
-        .select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("v"),
-            F.expr(_IVF_BEST).alias("cid"),
-        )
+    return _ivf_argmax(
+        emb.where(F.col("vec_id") != QUERY_VEC_ID),
+        _ivf_crow(_ivf_centroids(emb)),
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("v"),
     )
 
 
@@ -1694,7 +1695,7 @@ def q_sim_semdedup_sampled(
 ) -> DataFrame:
     """SemDeDup with a SAMPLED centroid fit — the 10⁹-vector shape. The
     full-corpus variant's Lloyd loop scans the whole corpus up to
-    2·``KMEANS_MAX_ITERS`` times, the one plan here you would not run at
+    ``KMEANS_MAX_ITERS`` times, the one plan here you would not run at
     10⁹ vectors; centroid QUALITY only needs a representative sample, so
     the fit runs on a deterministic 1/``SEMDEDUP_FIT_MOD`` md5-gated
     sample (the ``docs_sample`` pattern — engine- and scan-order-

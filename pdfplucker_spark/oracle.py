@@ -71,9 +71,6 @@ TEXT_FORMATS: Dict[str, tuple] = {
     "code": (" ", ""),  # default branch, utils.py:84-85
 }
 
-STRUCTURAL_KINDS = frozenset({"table", "picture", "page_break"})
-
-
 def parse_annotations(ann: Optional[str]):
     """Argmax classification over a 'class:conf,...' CSV.
 
@@ -213,8 +210,3 @@ def extract_doc(doc_id: str, spans: Sequence[Dict[str, Any]]) -> Dict[str, Any]:
             "images": [],
             "tables": [],
         }
-
-
-def extract_corpus(rows):
-    """Map ``extract_doc`` over (doc_id, spans) rows. Test helper."""
-    return [extract_doc(doc_id, spans) for doc_id, spans in rows]

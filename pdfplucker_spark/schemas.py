@@ -78,35 +78,6 @@ ARROW_EXTRACT_SCHEMA = pa.schema(
     ]
 )
 
-# Detail (sidecar) schemas mirroring the reference's Data bundle records
-# after temp-field pops (utils.py:145-157,103-111,186-188,210-214).
-IMAGE_DETAIL_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("ref", T.StringType(), True),
-        T.StructField("self_ref", T.StringType(), True),
-        T.StructField("caption", T.StringType(), True),
-        T.StructField("classification", T.StringType(), True),
-        T.StructField("confidence", T.DoubleType(), True),
-        T.StructField("references", T.ArrayType(T.StringType()), True),
-        T.StructField("footnotes", T.ArrayType(T.StringType()), True),
-        T.StructField("page", T.IntegerType(), True),
-    ]
-)
-
-TABLE_DETAIL_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("self_ref", T.StringType(), True),
-        T.StructField("caption", T.StringType(), True),
-        T.StructField("references", T.ArrayType(T.StringType()), True),
-        T.StructField("footnotes", T.ArrayType(T.StringType()), True),
-        T.StructField("page", T.IntegerType(), True),
-        T.StructField("table", T.StringType(), True),
-    ]
-)
-
-
 # ---------------------------------------------------------------------------
 # bundle schemas: the full Data-record parity output (utils.py:16-21 after
 # temp-field pops; references/footnotes omitted — always [] per F10)

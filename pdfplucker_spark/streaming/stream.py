@@ -1062,20 +1062,24 @@ def stream_decontaminate_incremental(
     )
     from pdfplucker_spark.plans.guards import guarded_probe
 
-    # the standing index: built ONCE from the staged eval docs, persisted
-    # and guarded — every micro-batch probes it instead of re-shingling
+    # the standing index is the staged eval docs, guarded ONCE (one
+    # occupancy count and drop log per drain). The guard's cached over-cap
+    # set serves that count only: the query outlives this call, so nothing
+    # could release a cache kept for the drain, and each wave re-derives
+    # the eval shingles and the over-cap set from the static files instead
     screen = guarded_probe(
         spark.read.parquet(input_dir + "_eval")
         .select(
             F.col("doc_id").alias("eval_doc_id"),
             F.split("text", " ").alias("__tk"),
         )
-        .select("eval_doc_id", F.explode(F.expr(_SHINGLE_OVER_TOKENS)).alias("g"))
-        .persist(),
+        .select("eval_doc_id", F.explode(F.expr(_SHINGLE_OVER_TOKENS)).alias("g")),
         ("g",),
         DECONTAM_DF_CAP,
         "stream_decontaminate_incremental",
     )
+    for df in screen.cached:
+        df.unpersist()
 
     def wave(_sp, cur, _bno, _prior):
         sh = cur.select(

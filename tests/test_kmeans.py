@@ -23,9 +23,10 @@ def _ref_kmeans(vecs: dict[int, list[float]], k: int, max_iters: int = 25):
     """Pure-Python Lloyd loop mirroring the engine's arithmetic exactly:
     score = sequential-fold dot / |centroid| (first strict max wins, cids
     ascending); mean = (exact sum of HALF_UP-10dp-quantized values) -> one
-    float division; stop on exact-zero movement."""
+    float division; stop on exact-zero movement. Returns the centroids and
+    the number of assign+recenter iterations run."""
     cents = {cid: list(vecs[cid]) for cid in range(1, k + 1)}
-    for _ in range(max_iters):
+    for it in range(1, max_iters + 1):
         assign: dict[int, int] = {}
         for vid, v in vecs.items():
             best_s, best_c = -1.0e308, -1
@@ -73,7 +74,7 @@ def _ref_kmeans(vecs: dict[int, list[float]], k: int, max_iters: int = 25):
         cents = new_cents
         if moved == 0.0:
             break
-    return cents
+    return cents, it
 
 
 def test_kmeans_fit_matches_pure_python_replay(spark):
@@ -82,7 +83,7 @@ def test_kmeans_fit_matches_pure_python_replay(spark):
         r.vec_id: [float(x) for x in r.embedding]
         for r in emb.select("vec_id", emb.embedding.cast("array<double>")).collect()
     }
-    expected = _ref_kmeans(vecs, IVF_K)
+    expected, _ = _ref_kmeans(vecs, IVF_K)
     got = {}
     for r in kmeans_fit(emb).collect():
         got[r.cid] = list(r.cv)
@@ -90,6 +91,87 @@ def test_kmeans_fit_matches_pure_python_replay(spark):
     for cid in expected:
         for d, (a, b) in enumerate(zip(got[cid], expected[cid])):
             assert a == b, (cid, d, a, b, abs(a - b))
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs started by ``fn()``, counted by a fresh job group (the
+    tracker keeps a group's jobs for the whole session)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_kmeans_fit_runs_three_jobs_per_iteration(spark):
+    """The fit's state is the K×D centroids on the driver: one seed
+    collect, then each Lloyd iteration is ONE query (broadcast argmax,
+    cell means, ``toArrow``) — at most 3 jobs, no checkpoint job and no
+    movement-aggregate jobs. Bounded by the replay's iteration count."""
+    emb = load(spark, SF, "embeddings")
+    vecs = {
+        r.vec_id: [float(x) for x in r.embedding]
+        for r in emb.select("vec_id", emb.embedding.cast("array<double>")).collect()
+    }
+    _, iters = _ref_kmeans(vecs, IVF_K)
+    assert 1 < iters < 25  # converges, and not in one step
+    n = _jobs(spark, lambda: kmeans_fit(emb))
+    assert n <= 1 + 3 * iters, (n, iters)
+
+
+def test_kcenter_runs_one_job_per_round(spark):
+    """The running state is checkpointed LAZILY: each round's argmax
+    (a TakeOrdered that scans every partition) fills the checkpoint in
+    its own job, so k rounds (the seed pick included) cost k jobs."""
+    from pdfplucker_spark.operators.similarity import kcenter_sample
+
+    emb = load(spark, SF, "embeddings")
+    n = _jobs(spark, lambda: kcenter_sample(emb, k=8))
+    assert n <= 8, n
+
+
+def _optimized(df) -> list[str]:
+    return df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+
+
+def _assert_cid_below_posexplode(lines):
+    """The argmax fold sits in the projection BELOW the posexplode (once
+    per vector), never in one above it (once per exploded cell, D×), and
+    no join on ``vec_id`` brings an assignment frame back."""
+    gen = [i for i, line in enumerate(lines) if "Generate posexplode" in line]
+    assert len(gen) == 1, "\n".join(lines)
+    assert not any("aggregate(" in line for line in lines[: gen[0]]), "\n".join(lines)
+    assert any("aggregate(transform(cents" in line for line in lines[gen[0] :])
+    assert not any("Join" in line and "vec_id" in line for line in lines), "\n".join(lines)
+
+
+def test_recenter_cells_compute_cid_below_posexplode(spark, monkeypatch):
+    """Both recenters — ``sim_ivf_recenter`` and every k-means iteration —
+    build their (cid, dim, v) cells from one scan of ``emb`` with ``cid``
+    computed before the explode."""
+    from pdfplucker_spark.operators.similarity import q_sim_ivf_recenter
+
+    _assert_cid_below_posexplode(_optimized(q_sim_ivf_recenter(spark, SF)))
+
+    emb = load(spark, SF, "embeddings")
+    plans = []
+    real = type(emb).toArrow
+
+    def spy(df):
+        plans.append(_optimized(df))
+        return real(df)
+
+    monkeypatch.setattr(type(emb), "toArrow", spy)
+    kmeans_fit(emb, max_iters=2)
+    assert len(plans) == 2
+    for lines in plans:
+        _assert_cid_below_posexplode(lines)
 
 
 def test_kmeans_query_shape_and_determinism(spark):
@@ -384,7 +466,7 @@ def test_kcenter_round_plan_size_stays_flat(spark):
     cur = (
         pts.where(F.col("vec_id") != int(seed.vec_id))
         .select("vec_id", "v", sim._d2_cols(F.col("v"), cvec).alias("best_d2"))
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     for i in range(2, 9):
         far = cur.orderBy(F.desc("best_d2"), F.asc("vec_id")).limit(1).collect()[0]
@@ -393,7 +475,7 @@ def test_kcenter_round_plan_size_stays_flat(spark):
             "vec_id", "v", F.least("best_d2", sim._d2_cols(F.col("v"), cvec)).alias("best_d2")
         )
         sizes.append(len(nxt._jdf.queryExecution().analyzed().toString()))
-        cur = nxt.localCheckpoint()
+        cur = nxt.localCheckpoint(eager=False)
     # flat: every round's pre-checkpoint plan is the same size (the center
     # literals differ in VALUE only, never in count)
     assert max(sizes) - min(sizes) < 200, sizes

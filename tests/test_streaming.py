@@ -790,6 +790,20 @@ def test_stream_dedup_drain_releases_each_waves_guard(spark, tmp_path):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_stream_decontaminate_drain_leaves_nothing_cached(spark):
+    """The decontamination stream guards its standing eval index once per
+    drain. The index is never persisted and the guard's over-cap set is
+    released once its count ran, so a drain leaves the session's cache as
+    it found it, not two frames per call."""
+    from pdfplucker_spark.streaming.stream import (
+        q_stream_decontaminate_incremental,
+    )
+
+    spark.catalog.clearCache()
+    q_stream_decontaminate_incremental(spark, "/root/testdata/sf0.001").count()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_stream_write_side_goes_through_one_kernel():
     """Every foreachBatch standing-index stream commits through ONE
     kernel, ``stream._wave_stream``: it is the only function that calls
